@@ -9,11 +9,11 @@ prints ONE JSON line::
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ..., "docs_per_sec": ...}
 
-Scaling mode (``--scaling``): runs the identical flagship job at two
-parallelism levels (local[8] = N, local[32] = 4N) in separate JVMs on the
-same input and writes docs/sec + scaling efficiency to BENCH/BASELINE.md
-(the sandbox protocol for the north_rule's N→4N ≥0.8 criterion; see
-BASELINE.md "Measurement protocol").
+Scaling mode (``--scaling-interleaved``): runs the identical flagship job
+at two parallelism levels (local[8] = N, local[32] = 4N) in two resident
+``--rep-server`` JVMs on the same input, as adjacent alternating-order rep
+pairs, and writes the per-pair N→4N efficiencies (target ≥0.8) to
+BENCH/SCALING_INTERLEAVED.md.
 """
 
 from __future__ import annotations
@@ -266,11 +266,9 @@ def run_dedup_job_leg(spark, sf_dir: str, reps: int) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# contention guard (round-3 verdict #1): a scaling campaign on a contended
-# host reports garbage (0.543 with bimodal walls, round-3 ledger). Before
-# each phase, time a fixed single-threaded CPU probe; if it runs >15% slower
-# than the stored quiet-host reference, retry after a pause and finally
-# refuse to report instead of reporting noise.
+# host probes: the interleaved scaling campaign brackets every rep with a
+# fixed CPU probe and compares it with the stored quiet-host reference, so
+# a contended pair is discarded instead of reported.
 # ---------------------------------------------------------------------------
 PROBE_REF_PATH = "BENCH/probe_ref.json"
 
@@ -319,52 +317,17 @@ def _load_probe_ref() -> dict:
     return {"hz": None, "hz_mt": None}
 
 
-def _save_probe_ref(ref: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    with open(PROBE_REF_PATH, "w") as f:
-        json.dump(ref, f)
-
-
-def probe_host(ratchet: bool = True) -> dict:
-    """One combined probe sample: {'hz': single-core, 'hz_mt': all-cores,
-    'ok': bool vs the stored reference}. References ratchet UP whenever a
-    sample beats them, converging to the quiet-host value even if first
-    calibrated on a busy one."""
+def probe_host() -> dict:
+    """One combined probe sample: {'hz': single-core, 'hz_mt': all-cores}
+    plus the reference each is judged against. A sample that beats the
+    stored reference stands in for it; the file itself is never rewritten."""
     ref = _load_probe_ref()
     hz = cpu_probe()
     hz_mt = cpu_probe_mt()
-    changed = False
-    if ref["hz"] is None or hz > ref["hz"]:
-        ref["hz"], changed = hz, True
-    if ref["hz_mt"] is None or hz_mt > ref["hz_mt"]:
-        ref["hz_mt"], changed = hz_mt, True
-    if ratchet and changed:
-        _save_probe_ref(ref)
-    ok = hz >= 0.85 * ref["hz"] and hz_mt >= 0.85 * ref["hz_mt"]
+    ref_hz = max(ref["hz"] or 0, hz)
+    ref_hz_mt = max(ref["hz_mt"] or 0, hz_mt)
     return {"hz": round(hz), "hz_mt": round(hz_mt),
-            "ref_hz": round(ref["hz"]), "ref_hz_mt": round(ref["hz_mt"]),
-            "ok": ok}
-
-
-def check_contention(max_retries: int = 3, wait_s: float = 60.0) -> dict:
-    """Probe until the host looks quiet (single-core AND all-cores ≥85% of
-    reference) or retries are exhausted (RuntimeError — refuse to report)."""
-    for attempt in range(max_retries):
-        p = probe_host()
-        if p["ok"]:
-            return p
-        print(
-            f"# contention: probe {p['hz']}/s (1c) {p['hz_mt']}/s (all) vs "
-            f"ref {p['ref_hz']}/{p['ref_hz_mt']} "
-            f"(attempt {attempt + 1}/{max_retries}), waiting {wait_s:.0f}s",
-            file=sys.stderr,
-        )
-        time.sleep(wait_s)
-    raise RuntimeError(
-        f"host contended: probes stuck below 85% of reference "
-        f"({p['hz']}/{p['ref_hz']} single-core, "
-        f"{p['hz_mt']}/{p['ref_hz_mt']} all-cores) — refusing to report"
-    )
+            "ref_hz": round(ref_hz), "ref_hz_mt": round(ref_hz_mt)}
 
 
 def run_operator_queries(spark, sf_dir: str, reps: int = BENCH_REPS) -> dict:
@@ -466,182 +429,6 @@ def _sync_docs_from_result(result: dict) -> None:
         print(f"# doc sync skipped: {exc}", file=sys.stderr)
 
 
-def main_corpus_only(args) -> None:
-    """One flagship measurement at a fixed core count. A first untimed pass
-    absorbs one-time JVM costs (tiered JIT of the large codegen'd emit
-    expression, Python worker spawn) — measured effect: 122→75→38 s over
-    three reps at 32 cores — so the timed passes report the steady-state
-    throughput a long-lived cluster actually sees."""
-    spark = build_session(args.cores)
-    # two untimed warm-ups: the first also writes the corpus; the second
-    # lets tiered JIT converge on the interpreted HOF evaluators (measured
-    # 122→75→38 s over early reps at 32 cores) and pre-forks the Python
-    # workers, so timed reps see the steady state a long-lived cluster runs
-    run_flagship(spark, args.n_docs)
-    run_flagship(spark, args.n_docs)
-    # PER-REP contention gating (round-4 v2 campaign forensics: contention
-    # arrived at rep 3 of 5 inside a phase whose boundary probes were both
-    # quiet — 32c walls [81.5, 85.7, 108, 103, 101]). Every timed rep is
-    # accepted only if the all-cores probe run immediately AFTER it is
-    # quiet; contaminated reps are discarded and re-run (bounded attempts),
-    # so the median is computed over quiet-bracketed walls only. This is
-    # NOT best-of-N: discards are probe-driven (external evidence), never
-    # wall-driven, and the discard count is reported.
-    secs, discarded = [], 0
-    attempts_left = args.reps + 4
-    while len(secs) < args.reps and attempts_left > 0:
-        attempts_left -= 1
-        n_docs, dt = run_flagship(spark, args.n_docs)
-        p = probe_host()
-        if p["ok"]:
-            secs.append(round(dt, 3))
-        else:
-            discarded += 1
-            print(
-                f"# rep discarded ({dt:.1f}s): post-rep probe "
-                f"{p['hz_mt']}/s all-cores vs ref {p['ref_hz_mt']}/s",
-                file=sys.stderr,
-            )
-    if not secs:
-        print(json.dumps({"cores": args.cores, "error": "all reps contended"}))
-        sys.exit(4)
-    # headline = MEDIAN of the accepted reps (round-1 verdict: best-of is
-    # not defensible under sandbox CPU noise)
-    import statistics
-
-    dt = statistics.median(secs)
-    print(json.dumps({"cores": args.cores, "docs": n_docs, "sec": dt,
-                      "docs_per_sec": round(n_docs / dt, 3), "all_secs": secs,
-                      "discarded_reps": discarded}))
-    spark.stop()
-
-
-def main_scaling(args) -> None:
-    if args.n_docs == BENCH_DOCS:  # default → use the scaling-sized corpus
-        args.n_docs = SCALING_DOCS
-    args.reps = max(args.reps, 5)  # median needs ≥5 reps to be defensible
-
-    def _abort(reason: str) -> None:
-        print(json.dumps({
-            "metric": "scaling_efficiency", "value": None,
-            "unit": "ratio", "queries": {}, "sf": 0, "aborted": reason,
-        }))
-        sys.exit(3)
-
-    results = {}
-    probes = {}
-    for cores in (8, 32):
-        cmd = [sys.executable, os.path.abspath(__file__), "--corpus-only",
-               "--cores", str(cores), "--n-docs", str(args.n_docs),
-               "--reps", str(args.reps)]
-        if os.path.exists("/usr/bin/taskset"):
-            # pin to exactly `cores` CPUs: an unpinned local[8] JVM borrows
-            # the idle CPUs for GC/shuffle/daemon threads, inflating the
-            # small-cluster number and understating scaling efficiency
-            cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-        # a phase is accepted only if the host is quiet BOTH before and
-        # after it (round-4 lesson: contention arriving mid-phase degraded
-        # the last reps of a phase whose start-probe passed); a phase whose
-        # post-probe fails is re-run once, then the campaign refuses
-        for attempt in range(2):
-            try:
-                pre = check_contention()
-            except RuntimeError as exc:
-                _abort(str(exc))
-            out = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=7200,
-            )
-            lines = [
-                ln for ln in out.stdout.splitlines() if ln.startswith("{")
-            ]
-            if not lines:
-                # child died without its JSON line (OOM-kill, crash): treat
-                # like a contended phase — retry once, then refuse — instead
-                # of an IndexError that loses the whole campaign (seen in
-                # the round-6 hunter ledger)
-                print(
-                    f"# phase {cores}c attempt {attempt + 1}: child emitted "
-                    f"no result (rc={out.returncode}); stderr tail: "
-                    f"{out.stderr.strip()[-300:]}",
-                    file=sys.stderr,
-                )
-                if attempt == 1:
-                    _abort(f"phase {cores}c child produced no result")
-                continue
-            res = json.loads(lines[-1])
-            post = probe_host()
-            if "error" not in res and post["ok"]:
-                results[cores] = res
-                probes[cores] = {"pre": pre, "post": post}
-                break
-            print(
-                f"# phase {cores}c attempt {attempt + 1}: post-probe "
-                f"contended ({post['hz_mt']}/s all-cores vs ref "
-                f"{post['ref_hz_mt']}/s) — phase walls untrusted, retrying",
-                file=sys.stderr,
-            )
-        else:
-            _abort(
-                f"phase {cores}c stayed contended across retries "
-                "(post-phase all-cores probe below 85% of reference)"
-            )
-
-    tp8, tp32 = results[8]["docs_per_sec"], results[32]["docs_per_sec"]
-    eff = round((tp32 / tp8) / 4.0, 3)
-    os.makedirs("BENCH", exist_ok=True)
-    # preserve the measurement-ledger history (## ... ledger sections):
-    # the headline block is replaced, the honesty log survives campaigns
-    ledger = ""
-    try:
-        with open("BENCH/BASELINE.md") as f:
-            prev = f.read()
-        idx = prev.find("## Round-")
-        if idx >= 0:
-            ledger = "\n" + prev[idx:]
-    except FileNotFoundError:
-        pass
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            "# BENCH/BASELINE — scaling measurement (sandbox protocol)\n\n"
-            "Same flagship extraction job (OCR-to-spans over the "
-            f"{args.n_docs}-doc deterministic corpus, power-law page counts, "
-            "1% huge docs) at two parallelism levels, per BASELINE.md's "
-            "measurement protocol (N = local[8], 4N = local[32]). Runs are "
-            "CPU-pinned via taskset; the headline wall is the MEDIAN of "
-            f"{args.reps} timed reps after two untimed warm-ups (JIT "
-            "convergence + Python worker pre-fork). The corpus is sized so "
-            "per-job fixed costs are <2% of wall at both levels. Each phase "
-            "is accepted only if a CPU probe (single-core AND all-cores "
-            "aggregate, ≥85% of the stored quiet-host reference, "
-            "BENCH/probe_ref.json) passes BOTH before and after it — a "
-            "contended campaign refuses to report instead of reporting "
-            "noise. This run's all-cores probes (pre→post): N-phase "
-            f"{probes[8]['pre']['hz_mt']}→{probes[8]['post']['hz_mt']}/s, "
-            f"4N-phase {probes[32]['pre']['hz_mt']}→"
-            f"{probes[32]['post']['hz_mt']}/s vs reference "
-            f"{probes[32]['post']['ref_hz_mt']}/s. Additionally every timed "
-            "rep is accepted only if the all-cores probe run immediately "
-            "after it is quiet (discards are probe-driven, never "
-            "wall-driven); probe-discarded reps this run: N-phase "
-            f"{results[8].get('discarded_reps', 0)}, 4N-phase "
-            f"{results[32].get('discarded_reps', 0)}.\n\n"
-            "| cores | docs | rep walls (s) | median wall (s) | docs/sec |\n"
-            "|---|---|---|---|---|\n"
-            f"| 8 (N) | {results[8]['docs']} | {results[8]['all_secs']} "
-            f"| {results[8]['sec']} | {tp8} |\n"
-            f"| 32 (4N) | {results[32]['docs']} | {results[32]['all_secs']} "
-            f"| {results[32]['sec']} | {tp32} |\n\n"
-            f"**Scaling efficiency = (throughput_4N / throughput_N) / 4 = {eff}**"
-            f" (target ≥ 0.8)\n\n"
-            f"Reproduce: `python bench.py --scaling --reps {args.reps}`.\n"
-            + ledger
-        )
-    print(json.dumps({"metric": "scaling_efficiency", "value": eff,
-                      "unit": "ratio", "queries": {}, "sf": 0,
-                      "throughput_8": tp8, "throughput_32": tp32,
-                      "probes": probes}))
-
-
 def main_rep_server(args) -> None:
     """Child of the interleaved campaign: ONE long-lived (optionally
     taskset-pinned) JVM that warms up twice, prints READY, then runs one
@@ -663,23 +450,18 @@ def main_rep_server(args) -> None:
 
 
 def main_scaling_interleaved(args) -> None:
-    """Drift-robust N-vs-4N protocol (round-5): the sequential campaign's
-    weakness — proven across rounds 2-5 — is that the host's effective
-    capacity oscillates on a ~minutes timescale, so a 35-minute 8-core
-    phase and a 32-core phase measured ~45 minutes apart sample DIFFERENT
-    hosts, and the all-or-nothing post-phase probe gate refuses whole
-    phases for drift that arrived after the useful reps. Here the two
-    cluster sizes run as ADJACENT rep pairs from two resident JVMs
-    (local[8] pinned to cores 0-7; local[32] unpinned), alternating pair
-    order to cancel any first-runner bias. Efficiency is the MEDIAN of
-    per-pair ratios eff_i = (tp32_i / tp8_i) / 4 — each ratio is taken
-    over a ~6-minute window in which host capacity is far more correlated
-    than across sequential phases. A pair is accepted only if the three
-    all-cores probes bracketing its two reps agree within 15% (stability
-    gate — RELATIVE, so a slow-but-steady host can still be measured
-    honestly); absolute probe levels vs the ratcheted quiet-host reference
-    are reported alongside so a capacity-capped host is visible, never
-    hidden."""
+    """Drift-robust N-vs-4N protocol. The host's effective capacity
+    oscillates on a ~minutes timescale, so the two cluster sizes run as
+    ADJACENT rep pairs from two resident JVMs (local[8] pinned to cores
+    0-7; local[32] unpinned), alternating pair order to cancel any
+    first-runner bias. Efficiency is the MEDIAN of per-pair ratios
+    eff_i = (tp32_i / tp8_i) / 4 — each ratio is taken over a ~6-minute
+    window in which host capacity is strongly correlated. A pair is
+    accepted only if the three all-cores probes bracketing its two reps
+    agree within 15% (stability gate — RELATIVE, so a slow-but-steady host
+    can still be measured honestly); absolute probe levels vs the stored
+    quiet-host reference are reported alongside so a capacity-capped host
+    is visible, never hidden."""
     if args.n_docs == BENCH_DOCS:
         args.n_docs = SCALING_DOCS
     args.reps = max(args.reps, 5)
@@ -722,7 +504,7 @@ def main_scaling_interleaved(args) -> None:
     # local[8] keeps cores 0-7 busy, so the kernel migrates co-tenant
     # threads onto 8-31 during the 8c rep — the 8c leg dodges load the 32c
     # leg must absorb). With --quiet-gate P, a pair STARTS only when the
-    # all-cores probe reads ≥ P% of the ratcheted quiet-host reference and
+    # all-cores probe reads ≥ P% of the stored quiet-host reference and
     # COUNTS only if every bracketing probe stays ≥ P% (plus the 15%
     # relative-stability gate); the campaign polls until --budget-min
     # expires, then reports however many quiet pairs it caught.
@@ -737,7 +519,7 @@ def main_scaling_interleaved(args) -> None:
             print(f"# budget exhausted after {waits} waits, "
                   f"{len(pairs)} quiet pairs", file=sys.stderr)
             break
-        pre = probe_host(ratchet=False)
+        pre = probe_host()
         if gate and pre["hz_mt"] < gate * pre["ref_hz_mt"]:
             waits += 1
             if waits % 10 == 1:
@@ -752,7 +534,7 @@ def main_scaling_interleaved(args) -> None:
         res = {}
         for cores in order:
             res[cores] = ask(cores)
-            probes.append(probe_host(ratchet=False))
+            probes.append(probe_host())
         hzs = [p["hz_mt"] for p in probes]
         ref_hz_mt = probes[-1]["ref_hz_mt"]
         stable = max(hzs) / min(hzs) <= 1.15
@@ -799,12 +581,11 @@ def main_scaling_interleaved(args) -> None:
             h for p in pairs for h in p["probes_hz_mt"]
         ) / ref["hz_mt"], 1,
     ) if ref["hz_mt"] else None
-    # ADVICE r5 (low): ref may be absent (probe_host(ratchet=False) never
-    # creates it) — a bare :.0f format here lost the whole multi-hour
-    # campaign's report to a TypeError.
+    # BENCH/probe_ref.json may be absent (nothing here writes it): a bare
+    # :.0f format would lose the whole multi-hour report to a TypeError
     cap_clause = (
         f"Host absolute capacity during the accepted pairs: median "
-        f"all-cores probe at {cap_pct}% of the ratcheted quiet-host "
+        f"all-cores probe at {cap_pct}% of the stored quiet-host "
         f"reference ({ref['hz_mt']:.0f}/s)"
         if ref["hz_mt"] is not None else
         "No quiet-host probe reference stored (BENCH/probe_ref.json "
@@ -828,9 +609,8 @@ def main_scaling_interleaved(args) -> None:
             "cores 0-7, local[32] unpinned), each warmed twice; reps run "
             "as adjacent alternating-order pairs so each per-pair ratio "
             "eff_i = (tp_4N / tp_N) / 4 samples a ~6-minute window of the "
-            "same host capacity — the sequential protocol's phases sit "
-            "~45 min apart on a host whose capacity oscillates on a "
-            "minutes timescale (see the measurement ledger). A pair "
+            "same host capacity, which oscillates on a minutes timescale "
+            "(see the measurement ledger). A pair "
             "counts only if the three all-cores probes bracketing its two "
             "reps agree within 15%." + gate_clause + "\n\n"
             "| pair | order | wall8 (s) | wall32 (s) | docs/s 8c | docs/s "
@@ -872,11 +652,11 @@ def main_scaling_interleaved(args) -> None:
 
 
 if __name__ == "__main__":
-    p = argparse.ArgumentParser()
-    p.add_argument("--scaling", action="store_true")
+    # no prefix matching: a bare --scaling must not silently start the
+    # multi-hour interleaved campaign
+    p = argparse.ArgumentParser(allow_abbrev=False)
     p.add_argument("--scaling-interleaved", action="store_true")
     p.add_argument("--rep-server", action="store_true")
-    p.add_argument("--corpus-only", action="store_true")
     p.add_argument("--cores", type=int, default=32)
     p.add_argument("--reps", type=int, default=1)
     p.add_argument("--n-docs", type=int, default=BENCH_DOCS)
@@ -888,13 +668,9 @@ if __name__ == "__main__":
                    help="interleaved mode: total campaign wall budget in "
                         "minutes (0 = attempts-based, reps+4)")
     a = p.parse_args()
-    if a.scaling:
-        main_scaling(a)
-    elif a.scaling_interleaved:
+    if a.scaling_interleaved:
         main_scaling_interleaved(a)
     elif a.rep_server:
         main_rep_server(a)
-    elif a.corpus_only:
-        main_corpus_only(a)
     else:
         main_bench(a)

@@ -72,9 +72,9 @@ def run_extraction_job(
     cached = getattr(processed, "_persisted_parent", None)
     if cached is not None:
         cached.unpersist()
-    lin = lineage.read_lineage(spark, out_path).filter(f"run_id = '{run_id}'")
     from pyspark.sql import functions as F
 
+    lin = lineage.read_lineage(spark, out_path).filter(F.col("run_id") == run_id)
     row = lin.agg(
         F.coalesce(F.sum("n_docs"), F.lit(0)).alias("docs"),
         F.coalesce(F.sum("n_spans"), F.lit(0)).alias("spans"),

@@ -261,13 +261,17 @@ def with_ivf_cell(
     # column and then referenced by array_position AND array_max — inlining
     # the whole tree twice into one projection doubles the dominant per-row
     # work at high cell counts. CollapseProject keeps the boundary (`_dots`
-    # is non-trivial and referenced twice). Same values, same cell.
-    tmp = embeddings.withColumn("_dots", _cell_dots(v, centroids))
+    # is non-trivial and referenced twice). Same values, same cell. The
+    # temp name must not shadow a caller column (it is dropped afterwards).
+    dots = "_dots"
+    while dots in embeddings.columns:
+        dots = "_" + dots
+    tmp = embeddings.withColumn(dots, _cell_dots(v, centroids))
     return tmp.withColumn(
         "ivf_cell",
-        (F.array_position(F.col("_dots"), F.array_max(F.col("_dots"))) - 1)
+        (F.array_position(F.col(dots), F.array_max(F.col(dots))) - 1)
         .cast("int"),
-    ).drop("_dots")
+    ).drop(dots)
 
 
 def write_ivf_partitioned(

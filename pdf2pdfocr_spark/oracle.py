@@ -20,8 +20,8 @@ Output contract — for each input span in offset order:
   + invisible text layer, pdf2pdfocr.py:769-805) with ligatures normalized;
 
 and final offsets renumbered 0..n-1 (reading order). ``doc_text`` is the
-byte-concat of per-page txt outputs in page order (create_text_output,
-pdf2pdfocr.py:928-940).
+byte-concat of per-page txt outputs in page order (the reference's txt
+sink, pdf2pdfocr.py:928-940).
 
 Admission gates run in the reference's order (pdf2pdfocr.py:694-710):
 min_size(697) → corrupt(1169-1175) → has_text under -t (1192-1194) →
@@ -68,15 +68,6 @@ class PipelineConfig:
     # to this many shuffle keys. Keep it ≥ several× the partition count —
     # with few keys, key-hash collisions re-concentrate the huge doc
     salt_buckets: int = 64
-    # Persist the gated document set before fan-out (Spark side only).
-    # Default OFF: the only thing the persist saves is the second scan of
-    # the nested source (page-explode path + reassembly-join path), and the
-    # A/B at the bench corpus (SCALE.md §cache) shows the persist costs MORE
-    # than the re-scan locally (serialization + memory pressure) — while at
-    # 100 TB a dataset-sized MEMORY_AND_DISK persist is a spill hazard.
-    # Flip on only when the source scan is genuinely expensive (e.g. remote
-    # object store with poor locality).
-    cache_admitted: bool = False
     # Persist the assembled output before consuming BOTH branches
     # (processed + quarantine): without it the expensive OCR stage is
     # recomputed for the second action. Off by default (single-action

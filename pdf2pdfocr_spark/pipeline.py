@@ -668,15 +668,6 @@ def extract(
 
     gated = apply_gates(docs, config, done_docs)
 
-    if config.cache_admitted:
-        from pyspark.storagelevel import StorageLevel
-
-        # both the page-explode branch and the reassembly join read this
-        # frame; without it the nested source is scanned+decoded twice
-        # (CacheManager dedupes identical plans, so repeated extract()
-        # calls over the same input share one cache entry)
-        gated = gated.persist(StorageLevel.MEMORY_AND_DISK)
-
     admitted = gated.filter(F.col("skip_reason").isNull())
     quarantined_by_gate = gated.filter(F.col("skip_reason").isNotNull()).select(
         "doc_id", "skip_reason", "spans"

@@ -1,4 +1,5 @@
-"""Corpus sources (S1-S3) and sinks (S5-S6).
+"""Corpus sources (S1-S3) and auxiliary table sinks. The spans sink (S5) is
+``lineage.write_checkpointed``; the S6 text output is its ``doc_text`` column.
 
 The engine's canonical source is the Iceberg documents table; the sandbox
 image ships no Iceberg jars, so the reader falls back to the parquet layout
@@ -119,18 +120,6 @@ def ingest_raw_files(spark: SparkSession, glob_path: str) -> DataFrame:
     )
 
 
-def write_spans(df: DataFrame, path: str, buckets: int = 64,
-                mode: str = "append") -> None:
-    """S5 sink: Iceberg-style bucketed parquet append (real deploys:
-    ``df.writeTo(tbl).append()``)."""
-    (
-        df.withColumn("doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(buckets)))
-        .write.mode(mode)
-        .partitionBy("doc_bucket")
-        .parquet(path)
-    )
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,
@@ -186,9 +175,3 @@ def write_geometry(ocr_geometry: DataFrame, path: str, buckets: int = 64,
         .partitionBy("doc_bucket")
         .parquet(path)
     )
-
-
-def text_output(processed: DataFrame) -> DataFrame:
-    """S6 text sink projection: (doc_id, doc_text) — the concatenated
-    per-page text in page order (create_text_output, pdf2pdfocr.py:928-940)."""
-    return processed.select("doc_id", "doc_text")

@@ -74,6 +74,14 @@ def test_job_idempotent_and_counts(spark, tmp_path):
     outdf = lineage.read_output(spark, out)
     assert outdf.count() == 12
     assert outdf.select("doc_id").distinct().count() == 12
+    # a quote in the run_id must reach the per-run lineage filter intact
+    more = corpus.corpus_df(spark, [
+        corpus.synth_document(f"quoted-{i}", "native_text", seed=42)
+        for i in range(3)
+    ])
+    m3 = run_extraction_job(spark, more, out, "o'brien-r3", config)
+    assert m3["run_id"] == "o'brien-r3" and m3["n_docs"] == 3
+    assert lineage.read_output(spark, out).count() == 15
 
 
 def test_merge_route_negotiated_from_capabilities(spark, tmp_path):

@@ -108,6 +108,29 @@ def test_ivf_topk_finds_true_neighbour(spark):
     assert 0 < n_cand < len(rows)
 
 
+def test_with_ivf_cell_keeps_caller_dots_column(spark):
+    """with_ivf_cell's temp column must not overwrite (and then drop) a
+    caller column that happens to share its name."""
+    import random
+
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(50)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = similarity.ivf_centroids(8, 4, seed=7)
+    want = {
+        r["vec_id"]: r["ivf_cell"]
+        for r in similarity.with_ivf_cell(emb, cents).collect()
+    }
+    clashing = emb.withColumn("_dots", F.col("vec_id") * 10).withColumn(
+        "__dots", F.lit("keep")
+    )
+    got = similarity.with_ivf_cell(clashing, cents)
+    assert got.columns == clashing.columns + ["ivf_cell"]
+    for r in got.collect():
+        assert r["_dots"] == r["vec_id"] * 10 and r["__dots"] == "keep"
+        assert r["ivf_cell"] == want[r["vec_id"]]
+
+
 def test_knn_join_and_near_dups(spark):
     rows = [
         (1, [1.0, 0.0]), (2, [0.99, 0.01]), (3, [0.0, 1.0]), (4, [0.01, 0.99]),

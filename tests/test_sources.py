@@ -1,9 +1,9 @@
 """Sources/sinks (S1/S2/S5): mime sniff on magic bytes, raw-file ingest,
-bucketed span sink round-trip."""
+round-trip through the checkpointed span sink the job writes."""
 
 from pyspark.sql import functions as F
 
-from pdf2pdfocr_spark import corpus
+from pdf2pdfocr_spark import corpus, lineage
 from pdf2pdfocr_spark.oracle import PipelineConfig
 from pdf2pdfocr_spark.pipeline import extract
 from pdf2pdfocr_spark.sources import readers
@@ -46,10 +46,10 @@ def test_bucket_partition_pruning(spark, tmp_path):
     """Reading one doc_bucket partition must scan only that partition's
     files (the Iceberg bucket-transform pruning analog)."""
     docs = corpus.corpus_df(spark, corpus.synth_documents(26))
-    processed, _ = extract(docs, PipelineConfig())
-    path = str(tmp_path / "spans")
-    readers.write_spans(processed, path, buckets=8, mode="overwrite")
-    full = spark.read.parquet(path)
+    processed, quarantine = extract(docs, PipelineConfig())
+    out = str(tmp_path / "out")
+    lineage.write_checkpointed(processed, quarantine, out, "r1", buckets=8)
+    full = lineage.read_output(spark, out)
     pruned = full.filter(F.col("doc_bucket") == 3)
     assert pruned.count() > 0
     # the bucket predicate must appear as a PartitionFilter (pruned at
@@ -61,10 +61,10 @@ def test_bucket_partition_pruning(spark, tmp_path):
 
 def test_write_read_spans_roundtrip(spark, tmp_path):
     docs = corpus.corpus_df(spark, corpus.synth_documents(13))
-    processed, _ = extract(docs, PipelineConfig())
-    path = str(tmp_path / "spans")
-    readers.write_spans(processed, path, buckets=8, mode="overwrite")
-    back = readers.read_documents(spark, path, table_format="parquet")
+    processed, quarantine = extract(docs, PipelineConfig())
+    out = str(tmp_path / "out")
+    lineage.write_checkpointed(processed, quarantine, out, "r1", buckets=8)
+    back = lineage.read_output(spark, out)
     assert back.count() == processed.count()
     assert set(back.select("doc_bucket").distinct().toPandas()["doc_bucket"]) <= set(range(8))
     a = {r["doc_id"]: r["spans"] for r in back.collect()}
