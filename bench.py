@@ -220,19 +220,48 @@ def run_ann_pruning_leg(spark, reps: int) -> dict:
     return timings
 
 
+def traced_dedup_job(spark, docs, out: str, run_id: str, **kwargs) -> tuple:
+    """``run_dedup_job`` once under perfbench's layer tracer, with Spark's
+    event log attached to a temp dir for this call only. Returns the job's
+    metrics and its wall split by layer: ``eventlog.self_times`` over the
+    call, keyed by ``eventlog.SELF_LAYERS`` names plus
+    ``trace.unattributed``, so the values sum to ``traced_wall_s``."""
+    import tempfile
+
+    from pdf2pdfocr_spark import jobs
+    from perfbench import eventlog, trace
+
+    tracer = trace.Tracer(spark)
+    with tempfile.TemporaryDirectory(prefix="bench_dedup_") as log_dir:
+        with trace.EventLog(spark, log_dir, "dedup") as log:
+            tracer.install()
+            try:
+                with tracer.span("jobs"):
+                    metrics = jobs.run_dedup_job(spark, docs, out, run_id, **kwargs)
+            finally:
+                tracer.uninstall()
+        _, t0, t1, _ = tracer.spans[-1]  # the "jobs" span closes last
+        log_data = eventlog.EventLogData.load(log.path)
+    att = eventlog.Attribution(log_data, t0, t1, tracer.spans)
+    selfs: dict = {}
+    for layer, sec in eventlog.self_times(att, "jobs").items():
+        # Spark names some jobs itself (parallel file listing): their time
+        # counts as unattributed, so the keys stay the known layers
+        key = layer if layer in eventlog.SELF_LAYERS else eventlog.UNATTRIBUTED
+        selfs[key] = selfs.get(key, 0.0) + sec
+    split = {layer: round(sec, 3) for layer, sec in sorted(selfs.items())}
+    split["traced_wall_s"] = round((t1 - t0) / 1000.0, 3)
+    return metrics, split
+
+
 def run_dedup_job_leg(spark, sf_dir: str, reps: int) -> dict:
     """Round-4 verdict #7: the chained training-data dedup job
     (MinHash∪SimHash pairs → connected components → keep → pack) gets a
     throughput number beside the flagship, not just a correctness test.
     Times jobs.run_dedup_job end-to-end (including its table writes) over
-    the sf documents table; median of ``reps`` after one warm-up. Round-5
-    verdict #4: one ADDITIONAL run records per-stage walls (signatures /
-    pairs / cc / keep_pack / ledgers / counts) via the job's
-    ``stage_timings`` hook, so the headline wall is attributable. The
-    headline reps stay BARRIER-FREE (the stage hook forces one extra
-    count() per persisted frame — measured ~+25% at sf0.1 — so timing the
-    headline in stage mode would break round-over-round comparability);
-    the stage run's own total is reported beside it for honesty."""
+    the sf documents table; median of ``reps`` after one warm-up. One more,
+    untimed call runs ``traced_dedup_job``: its per-layer split comes from
+    Spark's event log, not from barriers in the job."""
     import shutil
     import statistics
 
@@ -243,11 +272,9 @@ def run_dedup_job_leg(spark, sf_dir: str, reps: int) -> dict:
     )
     out = "/tmp/spark_graft_bench_dedupjob"
 
-    def _run(st=None):
+    def _run():
         shutil.rmtree(out, ignore_errors=True)
-        run_dedup_job(
-            spark, docs, out, "bench-dedup", sample_k=None, stage_timings=st
-        )
+        run_dedup_job(spark, docs, out, "bench-dedup", sample_k=None)
 
     _run()  # untimed warm-up
     secs = []
@@ -255,10 +282,8 @@ def run_dedup_job_leg(spark, sf_dir: str, reps: int) -> dict:
         t0 = time.perf_counter()
         _run()
         secs.append(time.perf_counter() - t0)
-    stages: dict = {}
-    t0 = time.perf_counter()
-    _run(st=stages)
-    stages["total_with_barriers"] = round(time.perf_counter() - t0, 3)
+    shutil.rmtree(out, ignore_errors=True)
+    _, stages = traced_dedup_job(spark, docs, out, "bench-dedup", sample_k=None)
     return {
         "dedup_job": round(statistics.median(secs), 3),
         "dedup_job_stages": stages,
@@ -380,9 +405,8 @@ def main_bench(args) -> None:
     timings["flagship_extract"] = round(dt, 3)
     docs_per_sec = round(n_docs / dt, 2)
 
-    # per-stage splits ride beside the queries map (values there stay
-    # plain seconds for round-over-round diffing); the headline
-    # 'dedup_job' float is the end-to-end wall these stages decompose
+    # the traced per-layer split rides beside the queries map (values
+    # there stay plain seconds for round-over-round diffing)
     dedup_stages = timings.pop("dedup_job_stages", {})
     total = round(sum(timings.values()), 3)
     result = {

@@ -106,7 +106,6 @@ def run_dedup_job(
     shard_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage_timings: dict | None = None,
 ) -> dict:
     """The end-to-end training-data dedup flow the operator suite exists
     for (round-3 verdict #7), one composed job:
@@ -130,32 +129,17 @@ def run_dedup_job(
     (never all-pairs) and every stage is one bounded shuffle — the same
     plans the per-operator oracle queries pin, just chained.
 
-    ``stage_timings``: pass a dict to get per-stage wall seconds written
-    into it (signatures / pairs / cc / keep_pack / ledgers / counts —
-    round-5 verdict #4: the bench leg's 40 s wall was unattributable).
-    Timing needs a materialization barrier per stage, so the persisted
-    frames are force-counted ONLY in this mode; with the default ``None``
-    the job plan is exactly as before (no extra actions).
+    Precondition: ``id_col`` is unique (rows sharing an id merge into one
+    MinHash signature). Token-less documents never pair, so all are kept.
+    A per-layer wall split comes from Spark's event log of a traced call
+    (``bench.traced_dedup_job``), never from timing actions in the job.
     """
-    import time as _time
-
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
     from pdf2pdfocr_spark.operators import dedup, sampling
     from pdf2pdfocr_spark.operators.text_analysis import token_count_ws
     from pdf2pdfocr_spark.partitioning import fan_out
-
-    _t = [_time.perf_counter()]
-
-    def _mark(stage: str, *force: DataFrame) -> None:
-        if stage_timings is None:
-            return
-        for frame in force:
-            frame.count()
-        now = _time.perf_counter()
-        stage_timings[stage] = round(now - _t[0], 3)
-        _t[0] = now
 
     # single-file/single-row-group inputs leave every tokenize/hash map
     # stage on one core (guide §2.5 input skew) — fan_out is a no-op when
@@ -183,7 +167,6 @@ def run_dedup_job(
     chunk_rows = dedup.simhash_chunk_rows(
         docs, id_col=id_col, text_col=text_col
     ).persist()
-    _mark("signatures", band_rows, chunk_rows)
 
     mh = dedup.minhash_lsh_pairs(
         docs, threshold=threshold, id_col=id_col, text_col=text_col,
@@ -194,12 +177,10 @@ def run_dedup_job(
         bucket_cap=bucket_cap, chunk_rows=chunk_rows,
     ).select("id_a", "id_b")
     pairs = mh.union(sh).distinct().persist()
-    _mark("pairs", pairs)
 
     clusters = dedup.duplicate_clusters(pairs)  # localCheckpoints internally
     clusters.write.mode("overwrite").parquet(f"{out_path}/clusters")
     clusters = spark.read.parquet(f"{out_path}/clusters")
-    _mark("cc")
 
     # duplicate_clusters always emits (doc_id, cluster_id) — rename to the
     # caller's id column so the anti-join resolves for any id_col (ADVICE r4)
@@ -222,7 +203,6 @@ def run_dedup_job(
         f"{out_path}/shards"
     )
     shards = spark.read.parquet(f"{out_path}/shards")
-    _mark("keep_pack")
 
     mh_over = dedup.minhash_band_overflow(
         docs, id_col=id_col, text_col=text_col, bucket_cap=bucket_cap,
@@ -237,14 +217,12 @@ def run_dedup_job(
     band_rows.unpersist()
     chunk_rows.unpersist()
     sh_frame.unpersist()
-    _mark("ledgers")
 
     # derived counts avoid recomputing the upstream frames: kept = in −
     # dropped (drop ⊆ docs, ids unique); sampled = shard rows (every
     # sampled doc lands in exactly one shard); overflow counts read the
-    # just-written ledgers. One agg per table (round-6: the stage-timing
-    # split showed this stage paying two separate shard scans — count +
-    # distinct — for what one aggregation computes)
+    # just-written ledgers. One agg per table: a count plus a separate
+    # distinct count would scan the shards twice
     n_in, n_dropped = raw_docs.count(), drop.count()
     shard_row = shards.agg(
         F.count("*").alias("rows"),
@@ -266,7 +244,6 @@ def run_dedup_job(
     }
     pairs.unpersist()
     lineage.write_metrics(spark, out_path, run_id, counts)
-    _mark("counts")
     return {"run_id": run_id, **counts}
 
 

@@ -230,12 +230,20 @@ def with_minhash(docs: DataFrame, num_hashes: int = 16, n: int = 3,
 
     ``shingles``: pass a (persisted) ``with_shingles`` frame to share one
     tokenize+shingle pass with the verification joins (round-6 verdict #3).
+
+    Precondition: ``doc_id`` is unique — rows sharing an id aggregate into
+    one signature mixing the minimums of both texts. A document with no
+    tokens gets NULL ``mh_*`` values, as in the DuckDB oracle.
     """
     sh = (
         shingles if shingles is not None
         else with_shingles(docs, n, id_col, text_col)
     )
-    ex = sh.select("doc_id", F.explode("shingles").alias("_s"))
+    # with_shingles yields [""] only for zero tokens (every real shingle
+    # holds ≥1 non-empty token); NULL hashes to NULL and min skips it
+    ex = sh.select("doc_id", F.explode("shingles").alias("_s")).select(
+        "doc_id", F.nullif(F.col("_s"), F.lit("")).alias("_s")
+    )
     return ex.groupBy("doc_id").agg(
         *[
             F.min(
@@ -260,7 +268,8 @@ def minhash_band_rows(
     candidate join run off the same frame. K must divide evenly into B —
     a silent remainder would drop minhashes from the last band's signature
     (lower precision) with no warning. ``shingles`` forwards to
-    ``with_minhash`` (share one shingle pass)."""
+    ``with_minhash`` (share one shingle pass). NULL signatures (no tokens)
+    get no band rows: ``concat_ws`` would bucket them all under ``""``."""
     if num_hashes % bands:
         raise ValueError(
             f"num_hashes={num_hashes} must be divisible by bands={bands} "
@@ -268,7 +277,7 @@ def minhash_band_rows(
         )
     r = num_hashes // bands
     mh = with_minhash(docs, num_hashes, n, id_col, text_col, shingles=shingles)
-    return mh.select(
+    return mh.filter(F.col("mh_0").isNotNull()).select(
         "doc_id",
         F.explode(
             F.array(

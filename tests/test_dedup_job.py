@@ -190,27 +190,47 @@ def test_dedup_job_cli(spark, tmp_path):
     assert spark.read.parquet(f"{out}/shards").count() == 8
 
 
-def test_dedup_job_stage_timings(spark, tmp_path):
-    """Round-5 verdict #4: the bench leg's dedup_job wall must be
-    attributable — stage_timings collects one wall per stage, every value
-    positive, and results are identical to a run without the hook."""
-    out = str(tmp_path / "dedup_timed")
-    docs = _fixture_docs(spark)
-    st: dict = {}
+def test_dedup_job_keeps_tokenless_docs(spark, tmp_path):
+    """Documents with NULL, empty or whitespace-only text have no MinHash
+    signature, so they never pair with each other and all survive."""
+    empties = spark.createDataFrame(
+        [(30, None, "web"), (31, "", "web"), (32, "   ", "book")],
+        "doc_id long, text string, source string",
+    )
+    out = str(tmp_path / "dedup_empty")
     metrics = jobs.run_dedup_job(
-        spark, docs, out, "run-t1", shard_budget=60, shard_buckets=2,
-        stage_timings=st,
+        spark, _fixture_docs(spark).unionByName(empties), out, "run-e1",
+        shard_budget=60, shard_buckets=2,
     )
-    assert sorted(st) == sorted(
-        ["signatures", "pairs", "cc", "keep_pack", "ledgers", "counts"]
-    )
-    assert all(v > 0 for v in st.values())
+    assert metrics["docs_kept"] == 11
+    kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/shards").collect()}
+    assert {30, 31, 32} <= kept
 
-    # the timing barriers must not change the job's results
-    out2 = str(tmp_path / "dedup_plain")
-    plain = jobs.run_dedup_job(
-        spark, docs, out2, "run-t1", shard_budget=60, shard_buckets=2
+
+def test_dedup_job_traced_split(spark, tmp_path):
+    """The bench leg's per-layer split comes from Spark's event log of one
+    traced call (bench.traced_dedup_job), not from barriers in the job:
+    each dedup layer gets wall time, the split sums to the traced wall,
+    and tracing leaves the job's results unchanged."""
+    import bench
+    from perfbench import eventlog
+
+    docs = _fixture_docs(spark)
+    metrics, split = bench.traced_dedup_job(
+        spark, docs, str(tmp_path / "traced"), "run-t1",
+        shard_budget=60, shard_buckets=2,
     )
-    assert {k: v for k, v in metrics.items() if k != "run_id"} == {
-        k: v for k, v in plain.items() if k != "run_id"
-    }
+    for layer in (
+        "operators.dedup.signatures", "operators.dedup.pairs",
+        "operators.dedup.cc",
+    ):
+        assert split.get(layer, 0) > 0, split
+    wall = split.pop("traced_wall_s")
+    assert set(split) <= {*eventlog.SELF_LAYERS, eventlog.UNATTRIBUTED}
+    assert abs(sum(split.values()) - wall) <= 0.05 * wall, (split, wall)
+
+    plain = jobs.run_dedup_job(
+        spark, docs, str(tmp_path / "plain"), "run-t1",
+        shard_budget=60, shard_buckets=2,
+    )
+    assert metrics == plain

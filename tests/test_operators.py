@@ -50,6 +50,42 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert (1, 4) not in got
 
 
+def test_minhash_tokenless_docs_match_duckdb(spark):
+    """NULL, empty and whitespace-only texts get NULL signatures and no band
+    rows, as in the DuckDB oracle, so they never pair with each other."""
+    import duckdb
+
+    from pdf2pdfocr_spark.plans.entry_queries import (
+        SQL_MINHASH_PAIRS,
+        SQL_MINHASH_SIG,
+    )
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, None),
+        (3, ""),
+        (4, "   "),
+        (5, "a quick brown fox jumped over a lazy dog today"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+
+    sig = dedup.with_minhash(docs, num_hashes=8, n=3)
+    assert sorted(tuple(r) for r in sig.collect()) == sorted(
+        con.execute(SQL_MINHASH_SIG).fetchall()
+    )
+    bands = dedup.minhash_band_rows(docs, num_hashes=8, bands=4, n=2)
+    assert {r["doc_id"] for r in bands.collect()} == {1, 5}
+    pairs = dedup.minhash_lsh_pairs(
+        docs, num_hashes=8, bands=4, n=2, threshold=0.08, bucket_cap=10
+    )
+    assert sorted(tuple(r) for r in pairs.collect()) == sorted(
+        con.execute(SQL_MINHASH_PAIRS).fetchall()
+    )
+
+
 def test_simhash_hamming(docs):
     fps = {r["doc_id"]: r["simhash"] for r in dedup.with_simhash(docs).collect()}
     assert fps[1] == fps[2]  # normalized-identical → identical fingerprint
