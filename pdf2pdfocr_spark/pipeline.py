@@ -839,8 +839,16 @@ def build_spark(app: str = "pdf2pdfocr_spark", master: str | None = None,
     # measured as bimodal walls (28 s steady vs 125-157 s degraded) on the
     # bench corpus. 1 GB keeps every compiled stage hot.
     jit_opts = "-XX:ReservedCodeCacheSize=1g"
+    # Spark's generated-class cache (default 100 entries) is smaller than one
+    # job's working set: a dedup job session compiles ~208 distinct classes
+    # and an extraction-resume session ~135, so with the default a warm
+    # dedup call recompiled 199-201 classes (Janino, then the JIT again)
+    # and a warm resume ~25. At 4000 entries warm dedup recompiles 0-6;
+    # 1000 keeps ~5x headroom over the larger set. Static conf: it must be
+    # set before the session starts.
     b = (
         SparkSession.builder.appName(app)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", driver_memory)
         .config("spark.driver.extraJavaOptions", jit_opts)
         .config("spark.executor.extraJavaOptions", jit_opts)

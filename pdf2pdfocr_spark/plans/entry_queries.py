@@ -901,7 +901,8 @@ FROM cand WHERE bit_count(xor(h_a, h_b)) <= 2
 
 def q_dedup_clusters(spark, sf_dir):
     """Pairwise near-dups → actionable groups: connected components over the
-    capped SimHash pair graph (min-label propagation, dedup.duplicate_clusters).
+    capped SimHash pair graph (large-star/small-star, finished by union-find
+    on the driver once the edges fit a broadcast; dedup.duplicate_clusters).
     The DuckDB oracle computes the same clusters via a recursive-CTE
     transitive closure (min reachable id per node) — an engine-independent
     definition of the component labels."""

@@ -234,3 +234,21 @@ def test_dedup_job_traced_split(spark, tmp_path):
         shard_budget=60, shard_buckets=2,
     )
     assert metrics == plain
+
+
+def test_dedup_job_warm_call_reuses_generated_code(spark, tmp_path):
+    """A second call on a warm session finds the job's generated classes in
+    Spark's codegen cache instead of compiling them again (Janino + JIT):
+    the default 100-entry cache is smaller than the ~200 classes one dedup
+    job generates, which made every warm call recompile about 200."""
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    docs = _fixture_docs(spark)
+    jobs.run_dedup_job(spark, docs, str(tmp_path / "cold"), "run-c1",
+                       shard_budget=60, shard_buckets=2)
+    before = compiled.getCount()
+    jobs.run_dedup_job(spark, docs, str(tmp_path / "warm"), "run-c2",
+                       shard_budget=60, shard_buckets=2)
+    assert compiled.getCount() - before <= 10

@@ -1,6 +1,8 @@
 """Unit tests for the training-data operators (dedup / similarity / text /
 multimodal) on small in-memory fixtures with hand-checkable answers."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +85,30 @@ def test_minhash_tokenless_docs_match_duckdb(spark):
     )
     assert sorted(tuple(r) for r in pairs.collect()) == sorted(
         con.execute(SQL_MINHASH_PAIRS).fetchall()
+    )
+
+
+def test_ngram_jaccard_tokenless_docs_match_duckdb(spark):
+    """NULL, empty and whitespace-only texts have no shingle to share, so
+    they never pair with each other, as in the DuckDB oracle."""
+    import duckdb
+
+    from pdf2pdfocr_spark.plans.entry_queries import SQL_NGRAM_JACCARD
+
+    rows = [
+        (1, "the quick brown fox jumps"),
+        (2, None),
+        (3, ""),
+        (4, "   "),
+        (5, "the quick brown fox leaps"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    pairs = dedup.ngram_jaccard_pairs(docs, n=2, threshold=0.08, max_df=30)
+    assert sorted(tuple(r) for r in pairs.collect()) == sorted(
+        con.execute(SQL_NGRAM_JACCARD).fetchall()
     )
 
 
@@ -284,58 +310,126 @@ def test_multimodal_codec_decoder_real_image(spark):
     assert rows[0]["feature"] is not None and rows[0]["out_width"] == 16
 
 
-def test_duplicate_clusters_min_label(spark):
-    from pdf2pdfocr_spark.operators import dedup
+CC_PATHS = ("driver", "distributed")
 
+
+@contextmanager
+def _cc_path(spark, path):
+    """Runs the body on one exit of ``dedup.duplicate_clusters``: the
+    default session finishes small edge sets on the driver ("driver"), and
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` forces distributed rounds
+    ("distributed"). Asserts which one ran by counting large-star phases."""
+    calls = []
+    large_star = dedup._large_star
+
+    def counted(edges):
+        calls.append(1)
+        return large_star(edges)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    dedup._large_star = counted
+    if path == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+        dedup._large_star = large_star
+    assert (len(calls) > 0) == (path == "distributed"), (path, len(calls))
+
+
+def _clusters(spark, pairs, path) -> dict:
+    with _cc_path(spark, path):
+        return {r["doc_id"]: r["cluster_id"]
+                for r in dedup.duplicate_clusters(pairs).collect()}
+
+
+def test_duplicate_clusters_min_label(spark):
     # two components: {1,2,3,7} via chain 1-2, 2-3, 3-7; {10,11}
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 7), (10, 11)], "id_a long, id_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
+    for path in CC_PATHS:
+        got = _clusters(spark, pairs, path)
+        assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}, path
+
+
+def test_duplicate_clusters_string_ids(spark):
+    """The job's ids are strings: labels are the minimum in Spark's string
+    order ("doc-10" < "doc-9", "z" < "é") on both paths."""
+    pairs = spark.createDataFrame(
+        [("doc-9", "doc-2"), ("doc-2", "doc-10"), ("é", "z"), ("x", "x")],
+        "id_a string, id_b string",
+    )
+    for path in CC_PATHS:
+        got = _clusters(spark, pairs, path)
+        assert got == {"doc-9": "doc-10", "doc-2": "doc-10",
+                       "doc-10": "doc-10", "é": "z", "z": "z", "x": "x"}, path
 
 
 def test_duplicate_clusters_chain_graph(spark):
-    """Round-3 verdict #2: a chain-shaped pair graph (A~B~C~…, realistic
-    template drift) has diameter = chain length; min-label propagation
-    needed O(diameter) rounds and raised at max_iters=20. Large-star/
-    small-star converges in O(log n) rounds — a 200-node chain (diameter
-    200) must resolve well under the default max_iters."""
-    from pdf2pdfocr_spark.operators import dedup
-
+    """A chain-shaped pair graph (A~B~C~…, realistic template drift) has
+    diameter = chain length; min-label propagation needs O(diameter)
+    rounds. Large-star/small-star converges in O(log n) rounds — a 200-node
+    chain (diameter 200) must resolve well under the default max_iters."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
+    for path in CC_PATHS:
+        assert _clusters(spark, pairs, path) == {i: 0 for i in range(201)}, path
+
+
+def test_duplicate_clusters_driver_finish_after_rounds(spark, monkeypatch):
+    """Edges above the bound run distributed rounds until the residual set
+    fits, then finish on the driver. The 200-edge chain's ids take 982
+    bytes; the star it converges to takes 692."""
+    calls = {"large_star": 0, "driver": 0}
+    large_star, driver_labels = dedup._large_star, dedup._driver_labels
+
+    def count(name, fn):
+        def wrapped(edges):
+            calls[name] += 1
+            return fn(edges)
+        return wrapped
+
+    monkeypatch.setattr(dedup, "_large_star", count("large_star", large_star))
+    monkeypatch.setattr(dedup, "_driver_labels", count("driver", driver_labels))
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "900b")
+    try:
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in dedup.duplicate_clusters(pairs).collect()}
+    finally:
+        spark.conf.set(key, prev)
     assert got == {i: 0 for i in range(201)}
+    assert calls["large_star"] > 0 and calls["driver"] == 1
 
 
 def test_duplicate_clusters_two_chains_and_dense(spark):
     """Mixed shapes in one pair set: two disjoint chains + one dense clique
     — labels must be each component's min, nothing cross-contaminates."""
-    from pdf2pdfocr_spark.operators import dedup
-
     chain_a = [(i, i + 1) for i in range(100, 140)]
     chain_b = [(i, i + 1) for i in range(500, 520)]
     clique = [(a, b) for a in range(900, 905) for b in range(a + 1, 905)]
     pairs = spark.createDataFrame(
         chain_a + chain_b + clique, "id_a long, id_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup.duplicate_clusters(pairs).collect()}
     expect = {i: 100 for i in range(100, 141)}
     expect.update({i: 500 for i in range(500, 521)})
     expect.update({i: 900 for i in range(900, 905)})
-    assert got == expect
+    for path in CC_PATHS:
+        assert _clusters(spark, pairs, path) == expect, path
 
 
 def test_duplicate_clusters_empty_pairs(spark):
-    from pdf2pdfocr_spark.operators import dedup
-
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup.duplicate_clusters(pairs).count() == 0
+    for path in CC_PATHS:
+        assert _clusters(spark, pairs, path) == {}, path
 
 
 def test_stratified_sample_deterministic_and_bounded(spark):
@@ -391,8 +485,6 @@ def test_pack_shards_bucket_isolation(spark):
 
 
 def test_keep_cluster_representatives(spark):
-    from pdf2pdfocr_spark.operators import dedup
-
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in range(8)], "doc_id long, text string"
     )
@@ -400,8 +492,10 @@ def test_keep_cluster_representatives(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 5), (6, 7)], "id_a long, id_b long"
     )
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.keep_cluster_representatives(docs, pairs).collect()
-    )
-    assert kept == [0, 1, 3, 4, 6]  # min-id per cluster + all unpaired
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            kept = sorted(
+                r["doc_id"]
+                for r in dedup.keep_cluster_representatives(docs, pairs).collect()
+            )
+        assert kept == [0, 1, 3, 4, 6], path  # min-id per cluster + all unpaired
