@@ -21,6 +21,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf2pdfocr_spark.lineage import literal_rows
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -120,15 +122,11 @@ def _ann_fingerprint(kind: str, params: list) -> str:
 def _write_ann_meta(spark, path: str, kind: str, params: list) -> None:
     """Sidecar fingerprint next to the partitioned table (written through
     Spark so it lands on whatever filesystem the table does)."""
-    (
-        spark.createDataFrame(
-            [(kind, _ann_fingerprint(kind, params))],
-            "kind string, fingerprint string",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .json(f"{path}__ann_meta")
-    )
+    literal_rows(
+        spark,
+        "kind string, fingerprint string",
+        [(kind, _ann_fingerprint(kind, params))],
+    ).write.mode("overwrite").json(f"{path}__ann_meta")
 
 
 def _validate_ann_meta(spark, path: str, kind: str, params: list) -> None:

@@ -196,6 +196,81 @@ def test_runs_committed_marker_written_after_done_ids(spark, tmp_path):
     assert marks == ["run-1", "run-2"]
 
 
+def test_lineage_written_before_commit_marker(spark, tmp_path, monkeypatch):
+    """The runs_committed marker is the LAST write: a failure while writing
+    lineage leaves the run uncommitted (so done_doc_ids reconciles it),
+    never a committed run with no lineage rows."""
+    import os
+
+    import pytest
+
+    def boom(out):
+        raise IOError("lineage write failed")
+
+    monkeypatch.setattr(lineage, "lineage_summary", boom)
+    processed, quarantine = extract(
+        corpus.corpus_df(spark, corpus.synth_documents(6)), PipelineConfig()
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(IOError, match="lineage write failed"):
+        lineage.write_checkpointed(processed, quarantine, out, "run-1")
+    assert not os.path.exists(f"{out}/runs_committed")
+
+
+def test_commit_writes_one_file_per_bucket_dir(spark, tmp_path):
+    """The spans append is clustered by its partition key, so every
+    (run_id, doc_bucket) dir holds exactly one parquet file, and a small
+    run's quarantine ledger is one file."""
+    import glob
+
+    out = str(tmp_path / "out")
+    processed, quarantine = extract(
+        corpus.corpus_df(spark, corpus.synth_documents(40)), PipelineConfig()
+    )
+    lineage.write_checkpointed(processed, quarantine, out, "run-1", buckets=8)
+    dirs = sorted(glob.glob(f"{out}/spans/run_id=run-1/doc_bucket=*"))
+    assert len(dirs) == 8
+    per_dir = {d: len(glob.glob(f"{d}/*.parquet")) for d in dirs}
+    assert set(per_dir.values()) == {1}, per_dir
+    assert len(glob.glob(f"{out}/quarantine/*.parquet")) == 1
+    assert lineage.landed_run(spark, out, "run-1").count() == (
+        processed.count()
+    )
+
+
+def test_ledger_rows_written_without_python_worker(
+    spark, tmp_path, monkeypatch
+):
+    """The commit marker and the metrics rows are JVM literals: with
+    ``createDataFrame`` (the Python-worker path) unavailable, the commit and
+    the metrics ledger still complete, and read back the same rows."""
+    from pyspark.sql import SparkSession
+
+    processed, quarantine = extract(
+        corpus.corpus_df(spark, corpus.synth_documents(8)), PipelineConfig()
+    )
+
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("ledger rows went through createDataFrame")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
+    out = str(tmp_path / "out")
+    lineage.write_checkpointed(processed, quarantine, out, "run-1")
+    lineage.write_metrics(spark, out, "run-1", {"ocr_pages_in": 5, "docs": 3})
+    lineage.write_metrics(spark, out, "run-2", {})
+
+    marks = spark.read.parquet(f"{out}/runs_committed").collect()
+    assert [r["run_id"] for r in marks] == ["run-1"]
+    assert lineage.read_lineage(spark, out).count() > 0
+    m = lineage.read_metrics(spark, out)
+    assert m.schema.simpleString() == (
+        "struct<stage:string,n:bigint,run_id:string>"
+    )
+    assert sorted(map(tuple, m.collect())) == [
+        ("docs", 3, "run-1"), ("ocr_pages_in", 5, "run-1"),
+    ]
+
+
 def test_legacy_spans_layout_refused(spark, tmp_path):
     """ADVICE r4 (medium): appending (run_id, doc_bucket) partitions into a
     pre-round-4 doc_bucket-only spans dir would corrupt partition discovery
