@@ -423,34 +423,7 @@ def main_bench(args) -> None:
         "dedup_job_stages": dedup_stages,
     }
     print(json.dumps(result))
-    _sync_docs_from_result(result)
     spark.stop()
-
-
-def _sync_docs_from_result(result: dict) -> None:
-    """Round-5 verdict #2: rewrite the ANN figures quoted in SCALE.md /
-    README.md from THIS run's numbers, labelled with the round artifact
-    the driver will record them as (newest existing BENCH_r*.json + 1) —
-    hand-copied figures drifted from the shipped JSON twice; derived text
-    cannot. Best-effort: a failure never loses the bench report."""
-    try:
-        import re as _re
-
-        repo = os.path.dirname(os.path.abspath(__file__))
-        sys.path.insert(0, os.path.join(repo, "tools"))
-        import sync_bench_docs
-
-        rounds = [
-            int(m.group(1))
-            for p in os.listdir(repo)
-            if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", p))
-        ]
-        label = f"BENCH_r{(max(rounds) + 1 if rounds else 1):02d}"
-        if sync_bench_docs.sync_from_result(result, label, repo=repo):
-            print(f"# SCALE.md/README.md ANN figures re-synced as {label}",
-                  file=sys.stderr)
-    except Exception as exc:  # noqa: BLE001 — docs sync must never kill bench
-        print(f"# doc sync skipped: {exc}", file=sys.stderr)
 
 
 def main_rep_server(args) -> None:

@@ -33,6 +33,7 @@ from pdf2pdfocr_spark.pipeline import (
     extract,
     negotiated_merge_route,
 )
+from pdf2pdfocr_spark.sources import readers
 
 
 def run_extraction_job(
@@ -283,7 +284,8 @@ def _parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--timeout", type=float, default=None)       # per document
     p.add_argument("--page-timeout", type=float, default=None)  # per page
     p.add_argument("-s", "--safe-mode", action="store_true")
-    p.add_argument("--salt-buckets", type=int, default=8)
+    p.add_argument("--salt-buckets", type=int,
+                   default=PipelineConfig.salt_buckets)
     # debug triage: keep full span payloads in the quarantine ledger (the
     # default slim ledger is (doc_id, skip_reason, n_spans) — at 100 TB the
     # payload copy duplicates quarantined input into quarantine/)
@@ -326,7 +328,7 @@ def main(argv=None) -> None:
         # maintenance job: no input read — operates on the checkpoint dir
         print(lineage.compact_done_ids(spark, args.output))
         return
-    docs = spark.read.parquet(args.input)
+    docs = readers.read_documents(spark, args.input)
     if args.job == "dedup":
         metrics = run_dedup_job(
             spark, docs, args.output, args.run_id,

@@ -426,7 +426,8 @@ def knn_candidates(
     over bands, and each (band, bucket) keeps at most ``bucket_cap``
     members (deterministic vec_id rank) — so a degenerate bucket holding
     half the corpus contributes O(cap²) pairs, never O(n²). Distinct
-    (vec_id, neighbour_id) pairs out; scoring happens in knn_join.
+    canonical pairs out (vec_id < neighbour_id, each unordered pair once);
+    knn_join scores them and emits both directions.
     """
     bands = max(1, min(bands, len(planes)))
     r = len(planes) // bands
@@ -460,7 +461,7 @@ def knn_candidates(
     return (
         capped.alias("a")
         .join(capped.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("vec_id"),
             F.col("b.vec_id").alias("neighbour_id"),
@@ -490,19 +491,13 @@ def knn_join(
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("nrm", _norm(F.col("v")))
     cand = knn_candidates(embeddings, planes, bands, bucket_cap, id_col, vec_col)
-    # Score each UNORDERED pair once, then mirror (guide §1.2: halve the
-    # volume term). The capped bucket self-join emits every candidate in
-    # both orders — (a,b) is present iff (b,a) is — so scoring the a<b
-    # half and emitting the mirror via explode yields exactly the same row
-    # set with half the join probes, half the distinct volume (the a<b
-    # filter pushes below the distinct: both columns are grouping keys)
-    # and half the dot products. The mirrored score is bit-identical: the
-    # per-term products and the norm product commute in IEEE arithmetic
+    # Score each canonical pair once, then mirror (guide §1.2: halve the
+    # volume term). The mirrored score is bit-identical: the per-term
+    # products and the norm product commute in IEEE arithmetic
     # (dot(a,b) ≡ dot(b,a), nrm_a·nrm_b ≡ nrm_b·nrm_a). explode — not a
     # self-union — keeps the scored subtree evaluated ONCE in the plan.
-    half = cand.filter(F.col("vec_id") < F.col("neighbour_id"))
     scored = (
-        half.join(
+        cand.join(
             vecs.select("vec_id", F.col("v").alias("v_a"),
                         F.col("nrm").alias("nrm_a")),
             "vec_id",

@@ -20,12 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, multiplier: int = 2) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism × multiplier`` slices iff
-    its current plan has fewer partitions than the session's default
+# slices per core: the uneven per-row costs of text operators get more
+# than one wave to balance out
+WAVES = 2
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism × WAVES`` slices iff its
+    current plan has fewer partitions than the session's default
     parallelism — i.e. only when the downstream map stage would otherwise
-    leave cores idle. The multiplier (default 2) gives the uneven per-row
-    costs of text operators more than one wave to balance out."""
+    leave cores idle."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
@@ -34,4 +38,4 @@ def fan_out(df: DataFrame, multiplier: int = 2) -> DataFrame:
         return df
     if current >= target:
         return df
-    return df.repartition(target * max(1, multiplier))
+    return df.repartition(target * WAVES)

@@ -8,9 +8,3 @@ parquet drops and run the extraction pipeline per micro-batch via
 batch goes through the same resume filter)."""
 
 from pdf2pdfocr_spark.streaming.ingest import stream_extract  # noqa: F401
-from pdf2pdfocr_spark.streaming.stateful import (  # noqa: F401
-    streaming_reassemble,
-)
-from pdf2pdfocr_spark.streaming.windowed import (  # noqa: F401
-    windowed_page_throughput,
-)

@@ -2,7 +2,7 @@
 job composes resume → extract → checkpointed write idempotently."""
 
 from pdf2pdfocr_spark import corpus, lineage
-from pdf2pdfocr_spark.jobs import _parse_args, run_extraction_job
+from pdf2pdfocr_spark.jobs import _parse_args, config_from_args, run_extraction_job
 from pdf2pdfocr_spark.ocr_engine import OcrConfig
 from pdf2pdfocr_spark.oracle import PipelineConfig
 
@@ -19,11 +19,16 @@ def test_parse_args_reference_flags():
     assert a.ignore_existing_text
 
 
-def test_every_cli_flag_reaches_the_config():
-    """Round-2 verdict #2: -r DPI, -m psm, -x extra flags, --timeout and -s
-    were parseable by OcrConfig but not wired through the job CLI."""
-    from pdf2pdfocr_spark.jobs import config_from_args
+def test_cli_defaults_match_config():
+    """A bare job submission runs with the library's defaults, so the CLI
+    keeps no second copy of a default that could drift from the config."""
+    a = _parse_args(["--input", "i", "--output", "o", "--run-id", "r"])
+    assert config_from_args(a) == PipelineConfig()
 
+
+def test_every_cli_flag_reaches_the_config():
+    """-r DPI, -m psm, -x extra flags, --timeout and -s must reach the
+    config, not stop at the parser."""
     a = _parse_args(
         "--input i --output o --run-id r -c tesseract -l deu -r 150 -m 6".split()
         + ["-x", "--oem 1 --fast"]  # reference -x: ONE string of flags
@@ -114,17 +119,28 @@ def test_merge_route_negotiated_from_capabilities(spark, tmp_path):
     assert m["merge_route"] == "multibackground"
 
 
-def test_compact_job_cli(spark, tmp_path):
+def test_compact_job_cli(spark, tmp_path, monkeypatch):
     """--job compact drives lineage.compact_done_ids through the
     spark-submit CLI: after two runs the done-set collapses to ≤1 file
-    per bucket and a follow-up resume still processes nothing."""
+    per bucket and a follow-up resume still processes nothing. The
+    extraction runs read --input through the S1 corpus reader."""
     from pdf2pdfocr_spark.jobs import main
+    from pdf2pdfocr_spark.sources import readers
 
+    read_paths = []
+    real_read = readers.read_documents
+
+    def spy(spark_, path, *args, **kwargs):
+        read_paths.append(path)
+        return real_read(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(readers, "read_documents", spy)
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     corpus.corpus_df(spark, corpus.synth_documents(10)).write.parquet(inp)
     main(["--input", inp, "--output", out, "--run-id", "r1"])
     main(["--input", inp, "--output", out, "--run-id", "r2"])
+    assert read_paths == [inp, inp]
     main(["--input", inp, "--output", out, "--run-id", "rc",
           "--job", "compact"])
     done = lineage.done_doc_ids(spark, out)

@@ -5,7 +5,7 @@
   inverted-index self-join.
 * knn_join: a degenerate LSH bucket holding the whole corpus must not
   self-join quadratically — the per-(band,bucket) population cap bounds
-  candidates at O(bands · cap²).
+  candidates at O(bands · cap²), each unordered pair emitted once.
 """
 
 import random
@@ -123,8 +123,8 @@ def test_knn_bucket_cap_bounds_candidates(spark):
     capped = similarity.knn_candidates(
         emb, planes, bands=bands, bucket_cap=cap
     ).count()
-    assert uncapped == n * (n - 1)            # ordered pairs, quadratic
-    assert 0 < capped <= bands * cap * (cap - 1)
+    assert uncapped == n * (n - 1) // 2       # canonical pairs, quadratic
+    assert 0 < capped <= bands * cap * (cap - 1) // 2
 
     # the capped join still produces top-k output rows
     out = similarity.knn_join(emb, planes, k=3, bands=bands, bucket_cap=cap)
