@@ -21,7 +21,7 @@ SURVEY.md §7 determinism).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_COLS = (
@@ -149,36 +149,54 @@ def _list_spans_run_ids(spark: SparkSession, out_path: str) -> list[str]:
     ]
 
 
-def _check_spans_layout(spark: SparkSession, out_path: str) -> None:
-    """Refuse to append into a pre-round-4 checkpoint dir (ADVICE r4
-    medium): spans used to be partitioned by doc_bucket only; mixing
-    ``doc_bucket=*`` and ``run_id=*`` dirs under one root breaks Spark
-    partition discovery (conflicting partition columns) for every later
-    read. Legacy checkpoints stay READABLE through the done_doc_ids
-    fallback — they just can't be appended to in place; re-point the job at
-    a fresh out_path (or rewrite the old spans through write_checkpointed
-    once) to migrate."""
+def _check_layout(spark: SparkSession, out_path: str) -> None:
+    """Refuse to append into a checkpoint dir written in an older layout,
+    where mixing layouts under one root breaks Spark partition discovery
+    (conflicting partition columns) for every later read:
+
+    * spans partitioned by ``doc_bucket`` only (ADVICE r4 medium), where
+      the current layout is (``run_id``, ``doc_bucket``);
+    * lineage as flat files, where the current layout partitions it by
+      ``run_id`` so a re-submitted run replaces its own rows.
+
+    Legacy checkpoints stay READABLE through the done_doc_ids fallback —
+    they just can't be appended to in place; re-point the job at a fresh
+    out_path (or rewrite the old tables once) to migrate."""
     jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{out_path}/spans")
-    try:
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(path):
-            return
-        legacy = [
-            st.getPath().getName()
-            for st in fs.listStatus(path)
-            if st.isDirectory()
-            and st.getPath().getName().startswith("doc_bucket=")
-        ]
-    except Exception:  # noqa: BLE001 — unreadable root: let the write fail
-        return
-    if legacy:
+
+    def legacy(table: str, is_legacy) -> list:
+        path = jvm.org.apache.hadoop.fs.Path(f"{out_path}/{table}")
+        try:
+            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+            if not fs.exists(path):
+                return []
+            return [
+                st.getPath().getName() for st in fs.listStatus(path)
+                if is_legacy(st, st.getPath().getName())
+            ]
+        except Exception:  # noqa: BLE001 — unreadable root: let the write fail
+            return []
+
+    spans = legacy(
+        "spans", lambda st, n: st.isDirectory() and n.startswith("doc_bucket=")
+    )
+    if spans:
         raise RuntimeError(
             f"{out_path}/spans holds a legacy doc_bucket-partitioned layout "
-            f"({legacy[0]}, ...); appending (run_id, doc_bucket) partitions "
+            f"({spans[0]}, ...); appending (run_id, doc_bucket) partitions "
             "into it would corrupt partition discovery for the whole table. "
             "Point the job at a fresh --output (old spans stay readable via "
             "read_output/done_doc_ids) or migrate the directory first."
+        )
+    flat = legacy(
+        "lineage", lambda st, n: st.isFile() and n.endswith(".parquet")
+    )
+    if flat:
+        raise RuntimeError(
+            f"{out_path}/lineage holds a legacy flat layout ({flat[0]}, ...); "
+            "writing run_id-partitioned lineage into it would corrupt "
+            "partition discovery for the whole table. Point the job at a "
+            "fresh --output or migrate the directory first."
         )
 
 
@@ -189,9 +207,11 @@ def write_checkpointed(
     run_id: str,
     buckets: int = 64,
     quarantine_payloads: bool = False,
-) -> None:
-    """Append the processed output + quarantine ledger + compact done-set +
-    lineage summary, then the commit marker.
+) -> dict:
+    """Append the processed output + quarantine ledger + compact done-set,
+    replace this run's lineage summary, then append the commit marker.
+    Returns this run's landed totals, ``{"n_docs", "n_spans"}``, observed
+    on the lineage write (no re-read).
 
     ``quarantine_payloads``: the quarantine ledger defaults to the SLIM
     schema (doc_id, skip_reason, n_spans, run_id) — round-5 verdict #5: at
@@ -218,6 +238,9 @@ def write_checkpointed(
     * lineage: aggregated from the LANDED spans partition read back for this
       run (O(this run)) — faithful to committed data even if the in-flight
       frame's cache was lost and would recompute differently (ADVICE r3).
+      Partitioned by run_id with dynamic partition overwrite: re-submitting
+      a run_id (the resume flow) replaces the run's rows with a summary of
+      everything the run has landed, instead of appending a second copy.
     * runs_committed: one (run_id) marker row appended LAST, after done_ids
       and lineage land — the commit record ``done_doc_ids`` uses to
       reconcile a crash between the spans append and the done_ids append
@@ -228,7 +251,7 @@ def write_checkpointed(
     from pdf2pdfocr_spark.sources.readers import write_bucketed_table
 
     spark = processed.sparkSession
-    _check_spans_layout(spark, out_path)
+    _check_layout(spark, out_path)
     out = with_bucket(processed, buckets).withColumn("run_id", F.lit(run_id))
     out.hint("rebalance", "doc_bucket").write.mode("append").partitionBy(
         "run_id", "doc_bucket"
@@ -258,12 +281,20 @@ def write_checkpointed(
         buckets=buckets,
         mode="append",
     )
-    lineage_summary(landed).write.mode("append").parquet(f"{out_path}/lineage")
+    landed_obs = Observation()
+    lineage_summary(landed).observe(
+        landed_obs,
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+        F.coalesce(F.sum("n_spans"), F.lit(0)).alias("n_spans"),
+    ).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("run_id").parquet(f"{out_path}/lineage")
     # commit marker LAST: its presence certifies done_ids and lineage cover
     # this run
     literal_rows(spark, "run_id string", [(run_id,)]).write.mode(
         "append"
     ).parquet(f"{out_path}/runs_committed")
+    return landed_obs.get
 
 
 def _uncommitted_run_ids(spark: SparkSession, out_path: str) -> list[str]:
@@ -295,9 +326,9 @@ def done_doc_ids(spark: SparkSession, out_path: str) -> DataFrame | None:
     every healthy resume. Falls back to the raw done_ids parquet (no
     metastore entry — e.g. a fresh session against an existing checkpoint
     dir), then to the legacy spans-table column scan, then None on a first
-    run. No ``.distinct()`` on the compact paths: doc_ids are written at
-    most once per run (resume filters re-runs), and left-anti semantics are
-    dup-insensitive anyway."""
+    run. No ``.distinct()`` on the compact paths: left-anti semantics are
+    dup-insensitive, so the ids a re-submitted run_id appends again cost
+    rows, not correctness."""
     base = None
     tbl = _done_table(out_path)
     try:
@@ -428,4 +459,4 @@ def read_output(spark: SparkSession, out_path: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.parquet(f"{out_path}/lineage")
+    return spark.read.parquet(f"{out_path}/lineage").select(*LINEAGE_COLS)

@@ -21,10 +21,18 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType, IntegerType, LongType, ShortType, StringType,
+)
 
 TOKEN_SPLIT_RE = r"\s+"
+# id types whose collected values order in Python as Spark orders them and
+# round-trip through JSON unchanged: the ones the cc driver finish takes
+_DRIVER_ID_TYPES = (ByteType, ShortType, IntegerType, LongType, StringType)
 
 
 def _tokens(col):
@@ -521,16 +529,22 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def _driver_labels(edges: DataFrame) -> DataFrame:
-    """Union-find over the collected edges: (u, cluster_id) for every node
-    that is not its component's root. Linking the larger root under the
-    smaller keeps every root its component's minimum id — the label the
-    star fixed point gives. Python orders ints and strs as Spark orders
-    longs and UTF-8 binary strings."""
+    """Union-find over the collected (u, v) edges: (doc_id, cluster_id) for
+    every endpoint. Linking the larger root under the smaller keeps every
+    root its component's minimum id — the label the star fixed point gives.
+    Python orders ints and strs as Spark orders longs and UTF-8 binary
+    strings.
+
+    The labels go back to the JVM as ONE JSON string literal, parsed by
+    ``from_json`` and exploded on a one-slice range: ``createDataFrame``
+    would ship the rows through a Python worker task
+    (``applySchemaToPythonRDD``), and per-row literals would give Catalyst
+    hundreds of expressions to fold."""
     parent: dict = {}
 
     def find(x):
-        root = x
-        while parent.get(root, root) != root:
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
             root = parent[root]
         while x != root:
             parent[x], x = root, parent[x]
@@ -540,9 +554,20 @@ def _driver_labels(edges: DataFrame) -> DataFrame:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    return edges.sparkSession.createDataFrame(
-        [(x, find(x)) for x in list(parent)], edges.schema
-    ).withColumnRenamed("v", "cluster_id")
+    labels = json.dumps([{"doc_id": x, "cluster_id": find(x)} for x in parent])
+    id_type = edges.schema["u"].dataType.simpleString()
+    return edges.sparkSession.range(0, 1, 1, 1).select(F.inline(F.from_json(
+        F.lit(labels), f"array<struct<doc_id:{id_type},cluster_id:{id_type}>>"
+    )))
+
+
+def _id_bytes():
+    """An edge's UTF-8 byte size with its ids as strings: what the driver
+    finish of ``duplicate_clusters`` holds against its bound."""
+    return (
+        F.octet_length(F.col("u").cast("string"))
+        + F.octet_length(F.col("v").cast("string"))
+    )
 
 
 def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
@@ -551,7 +576,16 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     step that turns pairwise dedup output into actionable groups (keep one
     representative per cluster, drop the rest).
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.),
+    Driver exit first: one aggregate sums the pairs' id bytes (the ids as
+    UTF-8 strings). When that is within the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` — the bound Spark already uses
+    to pull a join side onto the driver; ``-1`` disables it — the pairs are
+    collected once, labelled by union-find on the driver and returned as a
+    JVM-side frame (``_driver_labels``): no checkpoint, no label join, no
+    Python worker. Ids of other types than integers and strings always take
+    the distributed path.
+
+    Distributed path: alternating large-star / small-star (Kiveris et al.),
     which converges in O(log n) rounds on ANY graph shape, so a chain of
     pairwise-similar docs (A~B~C~…, realistic template drift) converges: a
     200-node chain takes ~6 rounds
@@ -560,24 +594,29 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     one signature aggregate on the initial edges and one after each phase
     (count + hash-sum + the edges' byte size — O(1) rows collected) and
     stops at the fixed point, where every edge points directly at its
-    component minimum (a star). ``max_iters`` is a safety net that raises
-    rather than silently emitting unconverged labels.
-
-    Driver finish: before each round, when the residual edges' byte size
-    (the ids as strings) is within the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` — the bound Spark already uses
-    to pull a join side onto the driver; ``-1`` disables it — the edges are
-    collected and labelled by union-find on the driver instead. Either exit
-    gives the same labels; only an edge set above the bound pays for
-    distributed rounds.
-
-    Per-phase ``localCheckpoint`` (eager) truncates the logical plan to the
-    materialized blocks — without it the plan doubles every round and
-    Catalyst re-analysis goes exponential.
+    component minimum (a star), or as soon as the residual edges fit the
+    bound, where ``_driver_labels`` finishes them. ``max_iters`` is a
+    safety net that raises rather than silently emitting unconverged
+    labels. Per-phase ``localCheckpoint`` (eager) truncates the logical
+    plan to the materialized blocks — without it the plan doubles every
+    round and Catalyst re-analysis goes exponential.
 
     Input: (id_a, id_b [, ...]) pair rows. Output: (doc_id, cluster_id),
     one row per node that appears in any pair.
     """
+    edges = pairs.select(
+        F.greatest("id_a", "id_b").alias("u"),
+        F.least("id_a", "id_b").alias("v"),
+    )
+    limit = (
+        pairs.sparkSession._jsparkSession.sessionState().conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if not isinstance(edges.schema["u"].dataType, _DRIVER_ID_TYPES):
+        limit = -1
+    if (edges.agg(F.sum(_id_bytes())).collect()[0][0] or 0) <= limit:
+        return _driver_labels(edges)
+
     nodes = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
@@ -585,17 +624,8 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+        edges.filter(F.col("u") != F.col("v")).distinct()
         .localCheckpoint(eager=True)
-    )
-    limit = (
-        pairs.sparkSession._jsparkSession.sessionState().conf()
-        .autoBroadcastJoinThreshold()
     )
 
     def _sig(e: DataFrame) -> tuple:
@@ -603,18 +633,14 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         row = e.agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            F.sum(
-                F.octet_length(F.col("u").cast("string"))
-                + F.octet_length(F.col("v").cast("string"))
-            ).alias("b"),
+            F.sum(_id_bytes()).alias("b"),
         ).collect()[0]
         return (row["n"], row["h"]), row["b"] or 0
 
     def _label(labels: DataFrame) -> DataFrame:
-        # nodes absent from labels are component roots: their own label
-        return nodes.join(
-            labels.withColumnRenamed("u", "doc_id"), "doc_id", "left"
-        ).select(
+        # nodes absent from labels are component roots (or only ever
+        # paired with themselves): their own label
+        return nodes.join(labels, "doc_id", "left").select(
             "doc_id",
             F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
         )
@@ -632,7 +658,9 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             # which holds only at the star fixed point (every non-root
             # points directly at its component min; roots have no out-edge).
             # Checking only the composition could stop on an L/S 2-cycle.
-            return _label(edges.groupBy("u").agg(F.min("v").alias("cluster_id")))
+            return _label(edges.groupBy(F.col("u").alias("doc_id")).agg(
+                F.min("v").alias("cluster_id")
+            ))
         sig = sig_small
     raise RuntimeError(
         f"duplicate_clusters did not converge in {max_iters} rounds — "

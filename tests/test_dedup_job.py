@@ -252,3 +252,63 @@ def test_dedup_job_warm_call_reuses_generated_code(spark, tmp_path):
     jobs.run_dedup_job(spark, docs, str(tmp_path / "warm"), "run-c2",
                        shard_budget=60, shard_buckets=2)
     assert compiled.getCount() - before <= 10
+
+
+def test_dedup_job_spark_job_budget(spark, tmp_path):
+    """The job is driver-bound, so its cost grows with the queries the
+    driver plans: its counts ride on Observations of the writes it already
+    does, and connected components finish on the driver with one aggregate
+    and one collect. Re-counting the written frames and checkpointing the
+    cc inputs took 56 jobs on this fixture; the job now takes 32."""
+    docs = _fixture_docs(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget", "count the jobs of one call")
+    try:
+        jobs.run_dedup_job(
+            spark, docs, str(tmp_path / "o"), "run-b1",
+            shard_budget=60, shard_buckets=2,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup("job-budget"))
+    assert n <= 40, n
+
+
+def test_dedup_job_sampled_counts_without_checkpoint_or_python_worker(
+    spark, tmp_path, monkeypatch
+):
+    """Under the broadcast bound connected components run no
+    ``localCheckpoint`` and no ``createDataFrame`` (a Python worker task),
+    and the observed counts of a sampled run match direct counts of what
+    the job wrote."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    docs = _fixture_docs(spark)
+    n_docs = docs.count()
+
+    def refuse(name):
+        def raiser(*args, **kwargs):
+            raise AssertionError(f"{name} called")
+        return raiser
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", refuse("localCheckpoint"))
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse("createDataFrame"))
+    out = str(tmp_path / "sampled")
+    metrics = jobs.run_dedup_job(
+        spark, docs, out, "run-s1", sample_k=2, strata_col="source",
+        shard_budget=60, shard_buckets=2,
+    )
+    monkeypatch.undo()
+
+    clusters = spark.read.parquet(f"{out}/clusters")
+    dropped = clusters.filter(F.col("doc_id") != F.col("cluster_id")).count()
+    shards = spark.read.parquet(f"{out}/shards")
+    m = {r["stage"]: r["n"] for r in lineage.read_metrics(spark, out).collect()}
+    assert m["docs_in"] == n_docs
+    assert m["docs_dropped"] == dropped == 3
+    assert m["docs_kept"] == n_docs - dropped
+    assert m["docs_sampled"] == shards.count() == 4  # 2 strata, k = 2
+    assert m["shards"] == shards.select("bucket", "shard").distinct().count()
+    assert {k: metrics[k] for k in m} == m

@@ -483,3 +483,42 @@ def test_compact_done_ids_one_fileset_same_semantics(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bk_compact_input")
+
+
+def test_resubmitted_run_id_replaces_its_lineage(spark, tmp_path):
+    """Re-submitting a run_id (the resume flow) replaces the run's lineage
+    rows with a summary of everything it landed: the second call reports
+    the same landed totals as the first, not twice them."""
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.corpus_df(spark, corpus.synth_documents(6))
+    out = str(tmp_path / "out")
+    first = jobs.run_extraction_job(spark, docs, out, "r1")
+    again = jobs.run_extraction_job(spark, docs, out, "r1")
+    landed = lineage.landed_run(spark, out, "r1")
+    n_docs = landed.count()
+    n_spans = landed.agg(F.sum(F.size("spans"))).collect()[0][0]
+    assert n_docs > 0
+    assert (first["n_docs"], first["n_spans"]) == (n_docs, n_spans)
+    assert (again["n_docs"], again["n_spans"]) == (n_docs, n_spans)
+    lin = lineage.read_lineage(spark, out).filter(F.col("run_id") == "r1")
+    assert lin.agg(F.sum("n_docs")).collect()[0][0] == n_docs
+    assert lineage.read_lineage(spark, out).columns == list(lineage.LINEAGE_COLS)
+
+
+def test_legacy_flat_lineage_layout_refused(spark, tmp_path):
+    """Lineage is partitioned by run_id; a checkpoint whose lineage/ holds
+    flat files is refused before anything is appended, because mixing the
+    two layouts breaks partition discovery for every later read."""
+    import os
+
+    import pytest
+
+    out = str(tmp_path / "legacy")
+    spark.range(1).write.parquet(f"{out}/lineage")
+    processed, quarantine = extract(
+        corpus.corpus_df(spark, corpus.synth_documents(4)), PipelineConfig()
+    )
+    with pytest.raises(RuntimeError, match="legacy flat layout"):
+        lineage.write_checkpointed(processed, quarantine, out, "run-1")
+    assert not os.path.exists(f"{out}/spans")
