@@ -273,11 +273,8 @@ def _parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--output", required=True)
     p.add_argument("--run-id", required=True)
     # job selector: 'extract' = the reference's OCR flow; 'dedup' = the
-    # chained training-data dedup/sample/pack flow (run_dedup_job);
-    # 'compact' = done-set maintenance (lineage.compact_done_ids: rewrite
-    # the appended resume done-set to one file-set per bucket)
-    p.add_argument("--job", choices=("extract", "dedup", "compact"),
-                   default="extract")
+    # chained training-data dedup/sample/pack flow (run_dedup_job)
+    p.add_argument("--job", choices=("extract", "dedup"), default="extract")
     p.add_argument("--dedup-threshold", type=float, default=0.5)
     p.add_argument("--dedup-max-hamming", type=int, default=3)
     p.add_argument("--dedup-bucket-cap", type=int, default=1000)
@@ -343,10 +340,6 @@ def config_from_args(args: argparse.Namespace) -> "PipelineConfig":
 def main(argv=None) -> None:
     args = _parse_args(argv)
     spark = build_spark(app=f"pdf2pdfocr_spark-{args.run_id}")
-    if args.job == "compact":
-        # maintenance job: no input read — operates on the checkpoint dir
-        print(lineage.compact_done_ids(spark, args.output))
-        return
     docs = readers.read_documents(spark, args.input)
     if args.job == "dedup":
         metrics = run_dedup_job(

@@ -4,8 +4,11 @@ The reference's resume primitive is the safe-mode output-exists check
 (pdf2pdfocr.py:1161-1167) and its progress tracking is marker files polled
 by glob (160, 985-991). At cluster scale both become tables:
 
-* **checkpoint**: the output table itself, written partitioned by a doc_id
-  hash bucket — the set of done doc_ids.
+* **checkpoint**: the spans table itself, partitioned by (run_id, doc_id
+  hash bucket) — its doc_id column is the one set of done doc_ids
+  (``done_doc_ids``). The spans append is the commit point: a doc counts
+  as done once its spans landed. Checkpoint dirs an older layout left
+  beside spans (a bucketed done-id copy, a commit marker) are never read.
 * **lineage**: one row per (run_id, doc_bucket) with doc_id range, doc/span
   counts and status — the per-partition metrics ledger.
 
@@ -45,14 +48,6 @@ def _escape_partition_value(v: str) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _ESCAPE_CHARS else c for c in v
     )
-
-
-def _unescape_partition_value(v: str) -> str:
-    """Inverse of Spark's escapePathName (%XX → char), for directory
-    listings → raw run_ids."""
-    from urllib.parse import unquote
-
-    return unquote(v)
 
 
 def literal_rows(spark: SparkSession, schema: str, rows: list) -> DataFrame:
@@ -110,43 +105,15 @@ def _run_partition_exists(
     whether a read failure means 'nothing landed' (dir absent) or 'landed
     but unreadable' (must propagate — ADVICE r5 medium ×2: treating a
     transient FS error as 'no data' lets resume double-append)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        f"{out_path}/spans/run_id={_escape_partition_value(run_id)}"
+    return _exists(
+        spark, f"{out_path}/spans/run_id={_escape_partition_value(run_id)}"
     )
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(path))
 
 
-def _done_table(out_path: str) -> str:
-    """Deterministic per-output-table name for the compact done-ids bucketed
-    table (Spark bucketed tables are metastore-registered by name)."""
-    import hashlib
-
-    return "done_ids_" + hashlib.md5(out_path.encode()).hexdigest()[:12]
-
-
-def _list_spans_run_ids(spark: SparkSession, out_path: str) -> list[str]:
-    """run_ids with a landed spans partition, from ONE filesystem listing of
-    the spans root (O(#runs) dirs — never a file-level or data scan). Uses
-    the Hadoop FS API so it works on HDFS/S3A exactly like local paths."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{out_path}/spans")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    # a listing error PROPAGATES (no blanket except): returning [] on a
-    # transient FS failure would hide uncommitted runs from the reconcile
-    # path and let resume double-append (same class as ADVICE r5 medium).
-    # Partition values are unescaped (ADVICE r5 low): Spark writes
-    # run_id 'a:b' as the dir 'run_id=a%3Ab'; diffing the escaped form
-    # against the raw ids in runs_committed marked such runs uncommitted
-    # forever (an O(run) rescan on every resume).
-    return [
-        _unescape_partition_value(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName().startswith("run_id=")
-    ]
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop FS ``exists`` (HDFS/S3A alike); errors propagate."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
 
 
 def _check_layout(spark: SparkSession, out_path: str) -> None:
@@ -159,9 +126,10 @@ def _check_layout(spark: SparkSession, out_path: str) -> None:
     * lineage as flat files, where the current layout partitions it by
       ``run_id`` so a re-submitted run replaces its own rows.
 
-    Legacy checkpoints stay READABLE through the done_doc_ids fallback —
-    they just can't be appended to in place; re-point the job at a fresh
-    out_path (or rewrite the old tables once) to migrate."""
+    Legacy checkpoints stay READABLE (``done_doc_ids`` and ``read_output``
+    read any spans layout) — they just can't be appended to in place;
+    re-point the job at a fresh out_path (or rewrite the old tables once)
+    to migrate."""
     jvm = spark._jvm
 
     def legacy(table: str, is_legacy) -> list:
@@ -208,10 +176,9 @@ def write_checkpointed(
     buckets: int = 64,
     quarantine_payloads: bool = False,
 ) -> dict:
-    """Append the processed output + quarantine ledger + compact done-set,
-    replace this run's lineage summary, then append the commit marker.
-    Returns this run's landed totals, ``{"n_docs", "n_spans"}``, observed
-    on the lineage write (no re-read).
+    """Append the quarantine ledger, then the processed output, then
+    replace this run's lineage summary. Returns this run's landed totals,
+    ``{"n_docs", "n_spans"}``, observed on the lineage write (no re-read).
 
     ``quarantine_payloads``: the quarantine ledger defaults to the SLIM
     schema (doc_id, skip_reason, n_spans, run_id) — round-5 verdict #5: at
@@ -220,43 +187,29 @@ def write_checkpointed(
     already addressable in the source table by doc_id. Pass True (debug
     deploys) to keep the ``spans`` column for payload-at-hand triage.
 
+    * quarantine: appended FIRST. The done-set is a lazy scan of the spans
+      table this call appends to, and the gates (safe mode's
+      ``output_exists`` join, resume's anti-join) are re-evaluated by the
+      quarantine write. Written after the spans, it would see this run's
+      own landed docs as done.
     * spans: partitioned by (run_id, doc_bucket) — resume-era reads touch
       one run's partition, never the history. The append carries a
       REBALANCE hint on ``doc_bucket``, so each (run_id, doc_bucket) dir
       gets ONE file: AQE coalesces a small run's buckets into few tasks
       and splits a skewed bucket at scale. The quarantine append is
-      rebalanced the same way (one file for a small run).
-    * done_ids: doc_id-only table, Spark-bucketed+sorted on doc_id
-      (``readers.write_bucketed_table``) — round-3 verdict #3: the resume
-      done-set used to scan the doc_id column of EVERYTHING ever written
-      (terabytes per re-submission at 10^12 docs); the compact table is
-      O(done-set) and its bucketing feeds the left-anti resume join without
-      shuffling the done side. Derived from the LANDED spans partition, NOT
-      the in-flight frame (ADVICE r4 high (b)): a cache-loss recompute with
-      timing-dependent quarantine could otherwise mark a doc done whose
-      spans never landed, permanently skipping it on resume.
+      rebalanced the same way (one file for a small run). This append is
+      the commit point: once it lands, its docs are in ``done_doc_ids``.
     * lineage: aggregated from the LANDED spans partition read back for this
       run (O(this run)) — faithful to committed data even if the in-flight
       frame's cache was lost and would recompute differently (ADVICE r3).
       Partitioned by run_id with dynamic partition overwrite: re-submitting
       a run_id (the resume flow) replaces the run's rows with a summary of
-      everything the run has landed, instead of appending a second copy.
-    * runs_committed: one (run_id) marker row appended LAST, after done_ids
-      and lineage land — the commit record ``done_doc_ids`` uses to
-      reconcile a crash between the spans append and the done_ids append
-      (ADVICE r4 high (a)): a spans run partition with no marker is
-      re-scanned into the done-set, so a killed run can neither
-      double-append nor drop docs.
+      everything the run has landed, instead of appending a second copy —
+      which also rebuilds the lineage of a run killed after its spans
+      append.
     """
-    from pdf2pdfocr_spark.sources.readers import write_bucketed_table
-
     spark = processed.sparkSession
     _check_layout(spark, out_path)
-    out = with_bucket(processed, buckets).withColumn("run_id", F.lit(run_id))
-    out.hint("rebalance", "doc_bucket").write.mode("append").partitionBy(
-        "run_id", "doc_bucket"
-    ).parquet(f"{out_path}/spans")
-
     q = quarantine.withColumn("run_id", F.lit(run_id))
     if "spans" in quarantine.columns:
         q = q.withColumn("n_spans", F.size("spans"))
@@ -264,23 +217,19 @@ def write_checkpointed(
             q = q.drop("spans")
     q.hint("rebalance").write.mode("append").parquet(f"{out_path}/quarantine")
 
+    out = with_bucket(processed, buckets).withColumn("run_id", F.lit(run_id))
+    out.hint("rebalance", "doc_bucket").write.mode("append").partitionBy(
+        "run_id", "doc_bucket"
+    ).parquet(f"{out_path}/spans")
+
     # ADVICE r5 (medium): the fallback to an empty frame is legal ONLY when
     # the partition genuinely doesn't exist (zero rows landed — e.g. every
     # doc quarantined). Any other failure (transient FS error, permission
-    # blip) must PROPAGATE so the runs_committed marker below is never
-    # written over a done_ids append that missed landed spans — a marker
-    # certifying false coverage would make resume double-append.
+    # blip) must PROPAGATE: lineage describes what landed, never a guess.
     if _run_partition_exists(spark, out_path, run_id):
         landed = landed_run(spark, out_path, run_id)
     else:
         landed = out.limit(0)
-    write_bucketed_table(
-        landed.select("doc_id").distinct(),
-        _done_table(out_path),
-        f"{out_path}/done_ids",
-        buckets=buckets,
-        mode="append",
-    )
     landed_obs = Observation()
     lineage_summary(landed).observe(
         landed_obs,
@@ -289,130 +238,24 @@ def write_checkpointed(
     ).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("run_id").parquet(f"{out_path}/lineage")
-    # commit marker LAST: its presence certifies done_ids and lineage cover
-    # this run
-    literal_rows(spark, "run_id string", [(run_id,)]).write.mode(
-        "append"
-    ).parquet(f"{out_path}/runs_committed")
     return landed_obs.get
 
 
-def _uncommitted_run_ids(spark: SparkSession, out_path: str) -> list[str]:
-    """spans run partitions with no runs_committed marker — the window left
-    by a kill between the spans append and the done_ids append."""
-    landed_runs = _list_spans_run_ids(spark, out_path)
-    if not landed_runs:
-        return []
-    try:
-        committed = {
-            r["run_id"]
-            for r in spark.read.parquet(f"{out_path}/runs_committed")
-            .select("run_id").distinct().collect()
-        }
-    except Exception:  # noqa: BLE001 — no marker table yet
-        committed = set()
-    return sorted(set(landed_runs) - committed)
-
-
 def done_doc_ids(spark: SparkSession, out_path: str) -> DataFrame | None:
-    """doc_ids already committed. Prefers the compact bucketed done_ids
-    table (O(done-set) scan; bucket metadata lets the resume anti-join skip
-    shuffling this side — tests/test_lineage_resume.py asserts both),
-    UNIONED with a scan of any spans run partition missing its
-    runs_committed marker (ADVICE r4 high (a): a run killed between the
-    spans append and the done_ids append has landed spans the compact table
-    doesn't know about — re-processing those docs would double-append).
-    The reconcile scan is O(uncommitted runs), i.e. zero partitions on
-    every healthy resume. Falls back to the raw done_ids parquet (no
-    metastore entry — e.g. a fresh session against an existing checkpoint
-    dir), then to the legacy spans-table column scan, then None on a first
-    run. No ``.distinct()`` on the compact paths: left-anti semantics are
-    dup-insensitive, so the ids a re-submitted run_id appends again cost
-    rows, not correctness."""
-    base = None
-    tbl = _done_table(out_path)
-    try:
-        if spark.catalog.tableExists(tbl):
-            base = spark.table(tbl).select("doc_id")
-    except Exception:  # noqa: BLE001 — metastore hiccup: fall through
-        pass
-    if base is None:
-        try:
-            base = spark.read.parquet(f"{out_path}/done_ids").select("doc_id")
-        except Exception:  # noqa: BLE001 — pre-compact-table layout
-            pass
-    if base is None:
-        try:
-            return (
-                spark.read.parquet(f"{out_path}/spans")
-                .select("doc_id").distinct()
-            )
-        except Exception:  # noqa: BLE001 — first run: no checkpoint yet
-            return None
-    for rid in _uncommitted_run_ids(spark, out_path):
-        try:
-            part = landed_run(spark, out_path, rid).select("doc_id").distinct()
-        except Exception:
-            # ADVICE r5 (medium): only swallow when the partition GENUINELY
-            # no longer exists (vanished mid-listing, e.g. concurrent
-            # cleanup). A transient read error on a still-present partition
-            # must propagate — silently dropping landed docs from the done
-            # set voids the reconcile guarantee on exactly the flaky-storage
-            # conditions it exists for.
-            if _run_partition_exists(spark, out_path, rid):
-                raise
-            continue
-        base = base.unionByName(part)
-    return base
-
-
-def compact_done_ids(
-    spark: SparkSession, out_path: str, buckets: int = 64
-) -> dict:
-    """Rewrite the appended done-set into one file-set per bucket (round-5
-    verdict #6): ``write_checkpointed`` APPENDS one bucketed file-set per
-    run, so after thousands of runs the resume scan stays O(done-set rows)
-    but O(runs) FILES — listing cost creeps up on every resume. This hook
-    (run it from a maintenance cadence, not the hot path) rewrites:
-
-        read current rows → stage a full copy at ``done_ids_compacting``
-        → overwrite the bucketed table from the staged copy → drop staging
-
-    The rows are repartitioned on the bucket key before the rewrite, so
-    Murmur3 alignment between repartition and bucketBy yields ONE file per
-    bucket. Bucketing metadata (key, N) is preserved — the zero-exchange
-    resume anti-join is untouched (asserted in tests). Crash window: if
-    the final overwrite dies mid-rewrite, ``{out_path}/done_ids_compacting``
-    still holds the COMPLETE staged done-set — re-register it with
-    ``readers.write_bucketed_table`` to recover; nothing is dropped until
-    the main table rewrite finished. Returns file counts before/after."""
-    from pdf2pdfocr_spark.sources.readers import write_bucketed_table
-
-    path = f"{out_path}/done_ids"
-    tbl = _done_table(out_path)
-    if spark.catalog.tableExists(tbl):
-        cur = spark.table(tbl)
-    else:  # fresh session against an existing checkpoint dir
-        cur = spark.read.parquet(path)
-    files_before = len(cur.inputFiles())
-
-    staging = f"{out_path}/done_ids_compacting"
-    cur.select("doc_id").write.mode("overwrite").parquet(staging)
-
-    write_bucketed_table(
-        spark.read.parquet(staging)
-        .repartition(buckets, F.col("doc_id")),
-        tbl,
-        path,
-        buckets=buckets,
-        mode="overwrite",
+    """doc_ids already committed: the doc_id column of the spans table —
+    the reference's output-exists check (pdf2pdfocr.py:1161-1167) as a
+    scan. None on a first run (no ``spans/`` dir); an error from the
+    existence check or the read propagates, since reading a failure as
+    "nothing done" would let resume double-append. The explicit schema
+    reads only doc_id, and makes a ``spans/`` that holds nothing but
+    ``_SUCCESS`` (a first run that quarantined every doc) an empty set."""
+    if not _exists(spark, f"{out_path}/spans"):
+        return None
+    return (
+        spark.read.schema("doc_id string")
+        .parquet(f"{out_path}/spans")
+        .select("doc_id")
     )
-    files_after = len(spark.table(tbl).inputFiles())
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(staging)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-    return {"files_before": files_before, "files_after": files_after}
 
 
 def resume_filter(docs: DataFrame, out_path: str) -> DataFrame:

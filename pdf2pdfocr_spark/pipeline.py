@@ -135,8 +135,9 @@ def apply_gates(
         # broadcast hint (ADVICE r3): the done set is the accumulated
         # output's doc_ids — unbounded growth, so a forced broadcast
         # eventually exceeds driver/executor memory at 100 TB scale; AQE
-        # picks broadcast while it's small and SMJ once it isn't (and the
-        # bucketed done_ids table side then joins without its own shuffle).
+        # picks broadcast while it's small and SMJ once it isn't. The done
+        # set is the spans table's doc_id column, so each done doc matches
+        # one row and is quarantined once.
         done = done_docs.select(
             F.col("doc_id").alias("doc_id"), F.lit(True).alias("_done")
         )

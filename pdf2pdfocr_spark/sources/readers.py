@@ -31,7 +31,7 @@ def _is_missing_iceberg_support(exc: Exception) -> bool:
     classpath (no jars in the sandbox) — NOT a real read error. Spark
     surfaces a missing format as ClassNotFoundException /
     DATA_SOURCE_NOT_FOUND; anything else (bad path, corrupt metadata,
-    permission denied) must propagate, or 'auto' silently misreads an
+    permission denied) must propagate, or read_documents silently misreads an
     Iceberg table's data/ dir as bare parquet (round-4 verdict #6)."""
     markers = (
         "classnotfoundexception",
@@ -46,7 +46,7 @@ def _is_not_iceberg_table(exc: Exception) -> bool:
     """True when Iceberg support IS present but the path demonstrably is
     not an Iceberg table (NoSuchTableException / 'not an Iceberg table' /
     missing table metadata). ADVICE r5 (low): on Iceberg-enabled clusters,
-    'auto' pointed at a plain parquet directory used to re-raise here
+    read_documents pointed at a plain parquet directory used to re-raise here
     instead of falling back — a regression vs the sandbox behaviour where
     the same read falls back via class-not-found. The parquet fallback is
     safe for these shapes because Iceberg itself has asserted there is no
@@ -74,20 +74,16 @@ def _exc_chain_matches(exc: Exception, markers: tuple) -> bool:
     return False
 
 
-def read_documents(spark: SparkSession, path: str, table_format: str = "auto") -> DataFrame:
-    """S1 corpus scan. ``table_format``: 'iceberg' | 'parquet' | 'auto'.
-    'auto' falls back to parquet ONLY when Iceberg support itself is absent
-    (class-not-found) or Iceberg affirms the path holds no table
-    (NoSuchTableException-shaped); real read failures re-raise."""
-    if table_format == "iceberg":
+def read_documents(spark: SparkSession, path: str) -> DataFrame:
+    """S1 corpus scan: the Iceberg table at ``path``, falling back to
+    parquet ONLY when Iceberg support itself is absent (class-not-found)
+    or Iceberg affirms the path holds no table (NoSuchTableException-
+    shaped); real read failures re-raise."""
+    try:
         return spark.read.format("iceberg").load(path)
-    if table_format == "auto":
-        try:
-            return spark.read.format("iceberg").load(path)
-        except Exception as exc:  # noqa: BLE001 — inspect, don't swallow
-            if not (_is_missing_iceberg_support(exc)
-                    or _is_not_iceberg_table(exc)):
-                raise
+    except Exception as exc:  # noqa: BLE001 — inspect, don't swallow
+        if not (_is_missing_iceberg_support(exc) or _is_not_iceberg_table(exc)):
+            raise
     return spark.read.parquet(path)
 
 
@@ -117,31 +113,6 @@ def ingest_raw_files(spark: SparkSession, glob_path: str) -> DataFrame:
         F.col("length").alias("size_bytes"),
         mime.alias("mime"),
         accepted.alias("accepted"),
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    path: str,
-    buckets: int = 64,
-    key: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """S5 variant: Spark-bucketed + sorted table (the sandbox analog of an
-    Iceberg `bucket(N, doc_id)`-partitioned table with sorted files).
-    Two tables bucketed with the SAME (key, N) join with ZERO exchanges —
-    the scan feeds SortMergeJoin directly (proven in
-    tests/test_sources.py::test_bucketed_join_has_no_exchange) — which is
-    how the resume anti-join and doc-level enrichment joins avoid shuffling
-    the 100 TB side."""
-    (
-        df.write.format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode(mode)
-        .saveAsTable(table)
     )
 
 

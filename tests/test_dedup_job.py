@@ -178,8 +178,19 @@ def test_overflow_reuses_persisted_signature_frame(spark):
         band.unpersist()
 
 
-def test_dedup_job_cli(spark, tmp_path):
-    """--job dedup drives the chained flow through the spark-submit CLI."""
+def test_dedup_job_cli(spark, tmp_path, monkeypatch):
+    """--job dedup drives the chained flow through the spark-submit CLI,
+    which reads --input through the S1 corpus reader."""
+    from pdf2pdfocr_spark.sources import readers
+
+    read_paths = []
+    real_read = readers.read_documents
+
+    def spy(spark_, path):
+        read_paths.append(path)
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(readers, "read_documents", spy)
     inp = str(tmp_path / "docs_in")
     out = str(tmp_path / "cli_out")
     _fixture_docs(spark).write.parquet(inp)
@@ -187,6 +198,7 @@ def test_dedup_job_cli(spark, tmp_path):
         "--input", inp, "--output", out, "--run-id", "run-cli",
         "--job", "dedup", "--shard-budget", "60", "--shard-buckets", "2",
     ])
+    assert read_paths == [inp]
     assert spark.read.parquet(f"{out}/shards").count() == 8
 
 

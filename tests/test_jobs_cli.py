@@ -117,34 +117,3 @@ def test_merge_route_negotiated_from_capabilities(spark, tmp_path):
         spark, docs, out, "r1", PipelineConfig(ocr=OcrConfig(engine="cuneiform"))
     )
     assert m["merge_route"] == "multibackground"
-
-
-def test_compact_job_cli(spark, tmp_path, monkeypatch):
-    """--job compact drives lineage.compact_done_ids through the
-    spark-submit CLI: after two runs the done-set collapses to ≤1 file
-    per bucket and a follow-up resume still processes nothing. The
-    extraction runs read --input through the S1 corpus reader."""
-    from pdf2pdfocr_spark.jobs import main
-    from pdf2pdfocr_spark.sources import readers
-
-    read_paths = []
-    real_read = readers.read_documents
-
-    def spy(spark_, path, *args, **kwargs):
-        read_paths.append(path)
-        return real_read(spark_, path, *args, **kwargs)
-
-    monkeypatch.setattr(readers, "read_documents", spy)
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    corpus.corpus_df(spark, corpus.synth_documents(10)).write.parquet(inp)
-    main(["--input", inp, "--output", out, "--run-id", "r1"])
-    main(["--input", inp, "--output", out, "--run-id", "r2"])
-    assert read_paths == [inp, inp]
-    main(["--input", inp, "--output", out, "--run-id", "rc",
-          "--job", "compact"])
-    done = lineage.done_doc_ids(spark, out)
-    files = done.inputFiles()
-    assert 0 < len(files) <= 64
-    m = run_extraction_job(spark, spark.read.parquet(inp), out, "r3")
-    assert m["n_docs"] == 0

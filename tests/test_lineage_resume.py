@@ -84,10 +84,13 @@ def test_lineage_reads_only_this_runs_partition(spark, tmp_path):
 
 
 def test_resume_scans_only_compact_done_table(spark, tmp_path):
-    """Round-3 verdict #3: after 3 sequential runs the resume done-set plan
-    reads ONLY the compact doc_id-only done_ids table — never the span
-    table's doc_id column over everything ever written (terabytes per
-    re-submission at 10^12 docs)."""
+    """After 3 sequential runs the resume done-set reads ONLY the doc_id
+    column of the spans table (the span payloads are never scanned), and
+    it holds exactly the landed docs: quarantined docs are NOT done, so a
+    later run retries them."""
+    import io
+    from contextlib import redirect_stdout
+
     docs = corpus.synth_documents(30)
     out = str(tmp_path / "out")
     _run(spark, docs[:10], out, run_id="run-1")
@@ -95,63 +98,24 @@ def test_resume_scans_only_compact_done_table(spark, tmp_path):
     _run(spark, docs, out, run_id="run-3")
 
     done = lineage.done_doc_ids(spark, out)
-    files = done.inputFiles()
-    assert files and all("/done_ids" in f for f in files), files
-    span_files = [f for f in files if "/spans" in f]
-    assert span_files == [], f"done-set scans the span table: {span_files}"
-    # done set carries exactly the processed docs (quarantined docs are NOT
-    # done — a later run must retry them)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        done.explain("formatted")
+    assert "ReadSchema: struct<doc_id:string>" in buf.getvalue()
     assert done.count() == lineage.read_output(spark, out).count()
-
-
-def test_resume_anti_join_zero_exchange_on_done_side(spark, tmp_path):
-    """The compact done table is Spark-bucketed+sorted on doc_id: against a
-    same-bucketed input table the resume left-anti join plans with ZERO
-    exchanges (the test_sources.py co-located-join pattern applied to the
-    real resume path — at 100 TB neither the corpus nor the done set gets
-    shuffled)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pdf2pdfocr_spark.sources.readers import write_bucketed_table
-
-    docs = corpus.synth_documents(20)
-    out = str(tmp_path / "out")
-    df = corpus.corpus_df(spark, docs)
-    processed, quarantine = extract(df, PipelineConfig())
-    lineage.write_checkpointed(processed, quarantine, out, "run-1", buckets=8)
-
-    write_bucketed_table(
-        df.select("doc_id"), "bk_resume_input", str(tmp_path / "bk_in"),
-        buckets=8,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        done = lineage.done_doc_ids(spark, out)
-        anti = spark.table("bk_resume_input").join(done, "doc_id", "left_anti")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            anti.explain("formatted")
-        assert "Exchange" not in buf.getvalue()
-        n_docs = df.count()
-        assert anti.count() == n_docs - done.count()  # quarantined remain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_resume_input")
 
 
 def test_crash_between_spans_and_done_ids_reconciles(spark, tmp_path):
     """ADVICE r4 (high): a run killed AFTER its spans append but BEFORE its
-    done_ids append must neither double-append on re-submission nor drop
-    docs — done_doc_ids reconciles spans run partitions that are missing
-    their runs_committed marker back into the done set."""
+    lineage write must neither double-append on re-submission nor drop
+    docs — the spans append is the commit point, so everything it landed
+    is already in the done set."""
     docs = corpus.synth_documents(26)
     out = str(tmp_path / "out")
     _run(spark, docs[:13], out, run_id="run-001")  # healthy first run
 
-    # simulate the kill window: the second run's SPANS land, but neither
-    # done_ids nor the runs_committed marker were written
+    # simulate the kill window: the second run's SPANS land, but its
+    # lineage was never written
     df = corpus.corpus_df(spark, docs[13:20])
     df = lineage.resume_filter(df, out)
     processed, _q = extract(df, PipelineConfig())
@@ -162,7 +126,7 @@ def test_crash_between_spans_and_done_ids_reconciles(spark, tmp_path):
         f"{out}/spans"
     )
 
-    # reconciled done set covers EVERYTHING landed, marker or not
+    # the done set covers EVERYTHING landed, lineage or not
     done = lineage.done_doc_ids(spark, out)
     landed = lineage.read_output(spark, out)
     assert done.count() == landed.select("doc_id").distinct().count()
@@ -182,39 +146,31 @@ def test_crash_between_spans_and_done_ids_reconciles(spark, tmp_path):
     assert a == b
 
 
-def test_runs_committed_marker_written_after_done_ids(spark, tmp_path):
-    """The commit marker certifies done_ids covers the run — present after
-    a healthy write, and exactly one row per run."""
+def test_lineage_written_before_commit_marker(spark, tmp_path, monkeypatch):
+    """The spans append is the commit point: a failure while writing
+    lineage leaves the landed docs done (resume does not redo them), and
+    re-submitting the run_id rebuilds the run's lineage from what landed."""
+    import pytest
+
     docs = corpus.synth_documents(6)
     out = str(tmp_path / "out")
-    _run(spark, docs, out, run_id="run-1")
-    _run(spark, docs, out, run_id="run-2")  # no-op resume, still marks
-    marks = sorted(
-        r["run_id"]
-        for r in spark.read.parquet(f"{out}/runs_committed").collect()
-    )
-    assert marks == ["run-1", "run-2"]
-
-
-def test_lineage_written_before_commit_marker(spark, tmp_path, monkeypatch):
-    """The runs_committed marker is the LAST write: a failure while writing
-    lineage leaves the run uncommitted (so done_doc_ids reconciles it),
-    never a committed run with no lineage rows."""
-    import os
-
-    import pytest
+    real_summary = lineage.lineage_summary
 
     def boom(out):
         raise IOError("lineage write failed")
 
     monkeypatch.setattr(lineage, "lineage_summary", boom)
-    processed, quarantine = extract(
-        corpus.corpus_df(spark, corpus.synth_documents(6)), PipelineConfig()
-    )
-    out = str(tmp_path / "out")
     with pytest.raises(IOError, match="lineage write failed"):
-        lineage.write_checkpointed(processed, quarantine, out, "run-1")
-    assert not os.path.exists(f"{out}/runs_committed")
+        _run(spark, docs, out, run_id="run-1")
+    landed = lineage.landed_run(spark, out, "run-1").count()
+    assert landed > 0
+    assert lineage.done_doc_ids(spark, out).count() == landed
+
+    monkeypatch.setattr(lineage, "lineage_summary", real_summary)
+    _run(spark, docs, out, run_id="run-1")
+    assert lineage.read_output(spark, out).count() == landed
+    lin = lineage.read_lineage(spark, out).filter(F.col("run_id") == "run-1")
+    assert lin.agg(F.sum("n_docs")).collect()[0][0] == landed
 
 
 def test_commit_writes_one_file_per_bucket_dir(spark, tmp_path):
@@ -241,9 +197,9 @@ def test_commit_writes_one_file_per_bucket_dir(spark, tmp_path):
 def test_ledger_rows_written_without_python_worker(
     spark, tmp_path, monkeypatch
 ):
-    """The commit marker and the metrics rows are JVM literals: with
-    ``createDataFrame`` (the Python-worker path) unavailable, the commit and
-    the metrics ledger still complete, and read back the same rows."""
+    """The metrics rows are JVM literals: with ``createDataFrame`` (the
+    Python-worker path) unavailable, the commit and the metrics ledger
+    still complete, and read back the same rows."""
     from pyspark.sql import SparkSession
 
     processed, quarantine = extract(
@@ -259,8 +215,6 @@ def test_ledger_rows_written_without_python_worker(
     lineage.write_metrics(spark, out, "run-1", {"ocr_pages_in": 5, "docs": 3})
     lineage.write_metrics(spark, out, "run-2", {})
 
-    marks = spark.read.parquet(f"{out}/runs_committed").collect()
-    assert [r["run_id"] for r in marks] == ["run-1"]
     assert lineage.read_lineage(spark, out).count() > 0
     m = lineage.read_metrics(spark, out)
     assert m.schema.simpleString() == (
@@ -334,19 +288,14 @@ def test_quarantine_payloads_flag_keeps_spans(spark, tmp_path):
 
 def test_run_id_with_escaped_chars_commits_cleanly(spark, tmp_path):
     """ADVICE r5 (low): Spark escapes ':', ' ', '%' etc. in partition-dir
-    values; the committed-set diff must compare RAW run_ids against the
-    UNESCAPED directory values, or such runs look uncommitted forever and
-    every resume pays an O(run) rescan."""
+    values; the landed read-back must resolve the ESCAPED directory of a
+    raw run_id, and resume must treat the run's docs as done."""
     docs = corpus.synth_documents(8)
     out = str(tmp_path / "out")
     rid = "run:2026-08-17 07%30"
     _run(spark, docs, out, run_id=rid)
 
-    # directory listing round-trips to the raw id
-    assert rid in lineage._list_spans_run_ids(spark, out)
-    # the marker matches, so the run is NOT treated as uncommitted
-    assert lineage._uncommitted_run_ids(spark, out) == []
-    # and the escaped partition path resolves for the landed read-back
+    # the escaped partition path resolves for the landed read-back
     assert lineage.landed_run(spark, out, rid).count() > 0
 
     # resume with the weird id already done: nothing reprocessed
@@ -360,57 +309,40 @@ def test_run_id_with_escaped_chars_commits_cleanly(spark, tmp_path):
 def test_done_doc_ids_propagates_read_error_on_present_partition(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r5 (medium): a transient read error on a STILL-PRESENT
-    uncommitted spans partition must propagate out of done_doc_ids —
-    silently dropping those landed docs from the done set would let resume
-    double-append on exactly the flaky-storage conditions the reconcile
-    path exists for. Only a genuinely vanished partition is skipped."""
+    """ADVICE r5 (medium): a failing ``spans/`` existence check or read
+    must propagate out of done_doc_ids — reading a transient storage error
+    as "nothing done" would let resume double-append. Only an absent
+    ``spans/`` means a first run (None)."""
     import pytest
+    from pyspark.sql import DataFrameReader
 
-    docs = corpus.synth_documents(10)
+    assert lineage.done_doc_ids(spark, str(tmp_path / "fresh")) is None
     out = str(tmp_path / "out")
-    _run(spark, docs[:5], out, run_id="run-1")
-    # kill window: spans landed for run-2, no marker
-    processed, _q = extract(corpus.corpus_df(spark, docs[5:]), PipelineConfig())
-    lineage.with_bucket(processed, 64).withColumn(
-        "run_id", F.lit("run-2")
-    ).write.mode("append").partitionBy("run_id", "doc_bucket").parquet(
-        f"{out}/spans"
+    _run(spark, corpus.synth_documents(5), out, run_id="run-1")
+
+    def blip(*args, **kwargs):
+        raise IOError("transient storage blip")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "_exists", blip)
+        with pytest.raises(IOError, match="transient storage blip"):
+            lineage.done_doc_ids(spark, out)
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", blip)
+        with pytest.raises(IOError, match="transient storage blip"):
+            lineage.done_doc_ids(spark, out)
+    assert lineage.done_doc_ids(spark, out).count() == (
+        lineage.read_output(spark, out).count()
     )
-
-    real_landed = lineage.landed_run
-
-    def flaky(spk, path, rid):
-        if rid == "run-2":
-            raise IOError("transient storage blip")
-        return real_landed(spk, path, rid)
-
-    monkeypatch.setattr(lineage, "landed_run", flaky)
-    with pytest.raises(IOError, match="transient storage blip"):
-        lineage.done_doc_ids(spark, out)
-
-    # but a partition that VANISHED mid-listing (listed, then gone before
-    # the read) is skipped safely: the real read raises and the fs check
-    # confirms the dir is absent
-    monkeypatch.setattr(lineage, "landed_run", real_landed)
-    real_list = lineage._list_spans_run_ids
-    monkeypatch.setattr(
-        lineage,
-        "_list_spans_run_ids",
-        lambda spk, path: real_list(spk, path) + ["run-ghost"],
-    )
-    done = lineage.done_doc_ids(spark, out)
-    landed = lineage.read_output(spark, out)
-    assert done.count() == landed.select("doc_id").distinct().count()
 
 
 def test_write_checkpointed_propagates_landed_read_error(
     spark, tmp_path, monkeypatch
 ):
     """ADVICE r5 (medium): if the landed-partition read-back fails while the
-    partition EXISTS, write_checkpointed must raise BEFORE the
-    runs_committed marker is written — a marker certifying a done_ids
-    append that missed landed spans would make resume double-append."""
+    partition EXISTS, write_checkpointed must raise instead of writing
+    lineage for an empty run — lineage describes what landed, never a
+    guess."""
     import os
 
     import pytest
@@ -426,63 +358,7 @@ def test_write_checkpointed_propagates_landed_read_error(
     processed, quarantine = extract(df, PipelineConfig())
     with pytest.raises(IOError, match="read-back failed"):
         lineage.write_checkpointed(processed, quarantine, out, "run-1")
-    assert not os.path.exists(f"{out}/runs_committed")
-
-
-def test_compact_done_ids_one_fileset_same_semantics(spark, tmp_path):
-    """Round-5 verdict #6: N appended runs leave O(N) file-sets in the
-    bucketed done table; compact_done_ids rewrites to ≤1 file per bucket
-    with an IDENTICAL done set, unchanged resume behavior, and the
-    zero-exchange anti-join preserved (bucket metadata survives)."""
-    import io
-    from contextlib import redirect_stdout
-
-    docs = corpus.synth_documents(30)
-    out = str(tmp_path / "out")
-    _run(spark, docs[:10], out, run_id="run-1")
-    _run(spark, docs[:20], out, run_id="run-2")
-    _run(spark, docs, out, run_id="run-3")
-
-    before_ids = {r["doc_id"] for r in lineage.done_doc_ids(spark, out).collect()}
-    stats = lineage.compact_done_ids(spark, out, buckets=64)
-    assert stats["files_before"] > stats["files_after"]
-    assert stats["files_after"] <= 64
-
-    after = lineage.done_doc_ids(spark, out)
-    assert {r["doc_id"] for r in after.collect()} == before_ids
-    # staging copy cleaned up
-    import os
-
-    assert not os.path.exists(f"{out}/done_ids_compacting")
-
-    # resume over the full corpus after compaction: nothing reprocessed
-    _run(spark, docs, out, run_id="run-post")
-    assert (
-        lineage.read_output(spark, out)
-        .filter(F.col("run_id") == "run-post").count()
-    ) == 0
-
-    # bucketing metadata preserved: anti-join against a same-bucketed
-    # input still plans with zero exchanges
-    from pdf2pdfocr_spark.sources.readers import write_bucketed_table
-
-    write_bucketed_table(
-        corpus.corpus_df(spark, docs).select("doc_id"),
-        "bk_compact_input", str(tmp_path / "bk_in"), buckets=64,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        anti = spark.table("bk_compact_input").join(
-            lineage.done_doc_ids(spark, out), "doc_id", "left_anti"
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            anti.explain("formatted")
-        assert "Exchange" not in buf.getvalue()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_compact_input")
+    assert not os.path.exists(f"{out}/lineage")
 
 
 def test_resubmitted_run_id_replaces_its_lineage(spark, tmp_path):
@@ -522,3 +398,107 @@ def test_legacy_flat_lineage_layout_refused(spark, tmp_path):
     with pytest.raises(RuntimeError, match="legacy flat layout"):
         lineage.write_checkpointed(processed, quarantine, out, "run-1")
     assert not os.path.exists(f"{out}/spans")
+
+
+def _dup_doc_ids(spark, out):
+    return (
+        lineage.read_output(spark, out)
+        .groupBy("doc_id").count().filter(F.col("count") > 1).count()
+    )
+
+
+def test_resume_across_fresh_sessions(spark, tmp_path):
+    """Each spark-submit starts with an empty session catalog. Three job
+    calls over one output, with every catalog table a call registered
+    dropped before the next (external tables: their files stay), must
+    still resume: no doc lands twice, and re-submitting the last slice
+    lands nothing."""
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.synth_documents(30)
+    out = str(tmp_path / "out")
+    landed = []
+    for n, run_id in ((10, "r1"), (20, "r2"), (20, "r3")):
+        before = {t.name for t in spark.catalog.listTables()}
+        m = jobs.run_extraction_job(
+            spark, corpus.corpus_df(spark, docs[:n]), out, run_id
+        )
+        landed.append(m["n_docs"])
+        for t in spark.catalog.listTables():
+            if t.name not in before and not t.isTemporary:
+                spark.sql(f"DROP TABLE {t.name}")
+    assert _dup_doc_ids(spark, out) == 0
+    assert landed[2] == 0
+    assert lineage.read_output(spark, out).count() == landed[0] + landed[1]
+
+
+def _quarantined(spark, out, run_id):
+    return [
+        (r["doc_id"], r["skip_reason"])
+        for r in spark.read.parquet(f"{out}/quarantine")
+        .filter(F.col("run_id") == run_id).collect()
+    ]
+
+
+def test_safe_mode_after_resubmitted_run_id(spark, tmp_path):
+    """Re-submitting a run_id re-lands none of its docs, so a later
+    safe-mode run quarantines each done doc exactly once as
+    ``output_exists``."""
+    import dataclasses
+
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.corpus_df(spark, corpus.synth_documents(6))
+    out = str(tmp_path / "out")
+    jobs.run_extraction_job(spark, docs, out, "r1")
+    jobs.run_extraction_job(spark, docs, out, "r1")
+    done = sorted(r["doc_id"] for r in lineage.read_output(spark, out).collect())
+    assert done
+    safe = dataclasses.replace(PipelineConfig(), safe_mode=True)
+    m = jobs.run_extraction_job(spark, docs, out, "r2", safe)
+    assert m["n_docs"] == 0
+    exists = sorted(
+        d for d, why in _quarantined(spark, out, "r2") if why == "output_exists"
+    )
+    assert exists == done
+
+
+def test_safe_mode_never_quarantines_what_it_lands(spark, tmp_path):
+    """The quarantine ledger is written before the spans append: a
+    safe-mode run over a partly done checkpoint quarantines exactly the
+    previously done docs as ``output_exists``, and none it lands itself."""
+    import dataclasses
+
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.synth_documents(12)
+    out = str(tmp_path / "out")
+    jobs.run_extraction_job(spark, corpus.corpus_df(spark, docs[:4]), out, "r1")
+    first = {r["doc_id"] for r in lineage.landed_run(spark, out, "r1").collect()}
+    safe = dataclasses.replace(PipelineConfig(), safe_mode=True)
+    m = jobs.run_extraction_job(spark, corpus.corpus_df(spark, docs), out, "r2", safe)
+    second = {r["doc_id"] for r in lineage.landed_run(spark, out, "r2").collect()}
+    assert m["n_docs"] == len(second) > 0
+    q = _quarantined(spark, out, "r2")
+    assert not second & {d for d, _ in q}
+    assert sorted(d for d, why in q if why == "output_exists") == sorted(first)
+    assert _dup_doc_ids(spark, out) == 0
+
+
+def test_resume_after_first_run_quarantined_everything(spark, tmp_path):
+    """A first run whose every doc is gated leaves a ``spans/`` with no
+    data files. The done set is then an empty frame (not None, not an
+    error), and a resume lands every doc."""
+    import dataclasses
+
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.corpus_df(spark, corpus.synth_documents(13))
+    out = str(tmp_path / "out")
+    gated = dataclasses.replace(PipelineConfig(), min_kbytes=10**9)
+    assert jobs.run_extraction_job(spark, docs, out, "r1", gated)["n_docs"] == 0
+    done = lineage.done_doc_ids(spark, out)
+    assert done is not None and done.count() == 0
+    m = jobs.run_extraction_job(spark, docs, out, "r2")
+    assert m["n_docs"] == 12  # one corrupt-class doc quarantines
+    assert lineage.read_output(spark, out).count() == 12

@@ -72,58 +72,9 @@ def test_write_read_spans_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same (key, N) must join WITHOUT a shuffle:
-    the bucketed scans feed SortMergeJoin directly (the co-located-join
-    scale path for resume anti-joins / doc enrichment at 100 TB)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from pdf2pdfocr_spark.sources.readers import write_bucketed_table
-
-    docs = spark.range(0, 2000).select(
-        F.format_string("doc-%09d", F.col("id")).alias("doc_id"),
-        (F.col("id") % 7).alias("x"),
-    )
-    done = spark.range(0, 500).select(
-        F.format_string("doc-%09d", F.col("id") * 3).alias("doc_id"),
-        F.lit(True).alias("done"),
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at 100 TB neither side broadcasts — force the SMJ path the test is
-        # actually about
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(docs, "bk_docs", str(tmp_path / "bk_docs"), buckets=8)
-        write_bucketed_table(done, "bk_done", str(tmp_path / "bk_done"), buckets=8)
-        joined = spark.table("bk_docs").join(spark.table("bk_done"), "doc_id")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: zero shuffles
-        assert joined.count() == 500
-        # and the anti-join (resume primitive) is shuffle-free too
-        anti = spark.table("bk_docs").join(
-            spark.table("bk_done"), "doc_id", "left_anti"
-        )
-        buf2 = io.StringIO()
-        with redirect_stdout(buf2):
-            anti.explain("formatted")
-        assert "Exchange" not in buf2.getvalue()
-        assert anti.count() == 1500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_docs")
-        spark.sql("DROP TABLE IF EXISTS bk_done")
-
-
 def test_missing_iceberg_support_classifier():
     """Round-4 verdict #6: only a missing-DataSource failure (no Iceberg
-    jars) may trigger the parquet fallback of read_documents('auto')."""
+    jars) may trigger the parquet fallback of read_documents."""
     e1 = Exception(
         "[DATA_SOURCE_NOT_FOUND] Failed to find the data source: iceberg."
     )
@@ -140,7 +91,7 @@ def test_missing_iceberg_support_classifier():
 
 
 def test_read_documents_auto_reraises_real_errors(spark, tmp_path, monkeypatch):
-    """'auto' falls back to parquet when Iceberg support is absent (the
+    """read_documents falls back to parquet when Iceberg support is absent (the
     sandbox), but a REAL read error must re-raise instead of silently
     misreading the table dir as bare parquet."""
     import pytest
@@ -152,7 +103,7 @@ def test_read_documents_auto_reraises_real_errors(spark, tmp_path, monkeypatch):
     # same failure reclassified as a real error → must propagate
     monkeypatch.setattr(readers, "_is_missing_iceberg_support", lambda exc: False)
     with pytest.raises(Exception):
-        readers.read_documents(spark, p, table_format="auto")
+        readers.read_documents(spark, p)
 
 
 def test_nested_schema_pruning_on_metadata_probe(spark, tmp_path):
@@ -227,7 +178,7 @@ def test_flagship_plan_has_exactly_three_exchanges(spark, tmp_path):
 
 
 def test_not_iceberg_table_classifier():
-    """ADVICE r5 (low): on Iceberg-ENABLED clusters, 'auto' over a plain
+    """ADVICE r5 (low): on Iceberg-ENABLED clusters, read_documents over a plain
     parquet dir fails NoSuchTableException-shaped, not class-not-found —
     that shape is fallback-eligible (Iceberg itself asserted no table is
     there); genuine read errors stay non-matching."""
@@ -258,7 +209,7 @@ def test_read_documents_auto_falls_back_on_no_such_table(
 ):
     """The NoSuchTableException-shaped failure path falls back to parquet
     even when Iceberg support is present (missing-support classifier says
-    no), restoring auto-mode parquet reads on Iceberg-enabled clusters."""
+    no), restoring parquet reads on Iceberg-enabled clusters."""
     p = str(tmp_path / "t")
     spark.range(3).toDF("doc_id").write.parquet(p)
     monkeypatch.setattr(
