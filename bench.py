@@ -64,10 +64,11 @@ def build_session(cores: int):
     from pdf2pdfocr_spark.pipeline import build_spark
 
     # 3 tasks per core: page batches are uneven (power-law page counts), so a
-    # single wave of core-sized tasks idles cores at every stage tail
+    # single wave of core-sized tasks idles cores at every stage tail. The
+    # 48g heap is the one the BENCH_r* figures were measured with.
     spark = build_spark(
         app=f"bench-local{cores}", master=f"local[{cores}]",
-        shuffle_partitions=3 * max(cores, 8),
+        shuffle_partitions=3 * max(cores, 8), driver_memory="48g",
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -23,9 +23,12 @@ sanctioned Arrow escape hatch. No custom Catalyst rules (SURVEY.md §4).
 
 from __future__ import annotations
 
+import os
+import re
 from typing import Iterator
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -828,12 +831,28 @@ def extract(
 
 
 def build_spark(app: str = "pdf2pdfocr_spark", master: str | None = None,
-                cores: int = 32, shuffle_partitions: int | None = None,
-                driver_memory: str = "48g") -> SparkSession:
-    """Session tuned for the sandbox (local mode); on a real cluster these
-    arrive via spark-submit --conf (north_rule packaging). In local mode the
-    driver JVM runs every task — the default 1g heap GC-thrashes as soon as
-    tens of tasks hold collect_list/Arrow buffers, so size it explicitly."""
+                cores: int | None = None, shuffle_partitions: int | None = None,
+                driver_memory: str | None = None) -> SparkSession:
+    """Session tuned for local mode, where the driver JVM runs every task.
+
+    Defaults come from the host: ``cores`` from the CPUs this process may
+    run on, the driver heap from physical RAM (``_host_driver_memory``).
+    The default 1g heap GC-thrashes as soon as tens of tasks hold
+    collect_list/Arrow buffers, so it is sized explicitly.
+
+    Under spark-submit the JVM is already up with the submitted conf: its
+    master and driver memory win, and this sets a master only when the
+    caller passes one. ``local[cores]`` and the heap apply only when this
+    call starts the driver JVM itself.
+
+    Local masters list files on the driver: a listing of more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default 32)
+    dirs otherwise runs as a Spark job with one task per dir, and each task
+    spends ~12 ms deserializing the Hadoop conf to list one local dir: a
+    resume over run dirs of more than 32 ``doc_bucket`` dirs would run up
+    to four such jobs per call. Cluster masters keep Spark's parallel
+    listing, which pays there."""
+    cores = cores or len(os.sched_getaffinity(0))
     # Codegen-heavy plans (wide HOF expressions over span structs) overflow
     # the JVM's default 240 MB JIT code cache after a few job runs; the JIT
     # then disables itself and whole stages fall back to the interpreter —
@@ -850,7 +869,6 @@ def build_spark(app: str = "pdf2pdfocr_spark", master: str | None = None,
     b = (
         SparkSession.builder.appName(app)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.driver.memory", driver_memory)
         .config("spark.driver.extraJavaOptions", jit_opts)
         .config("spark.executor.extraJavaOptions", jit_opts)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
@@ -864,13 +882,27 @@ def build_spark(app: str = "pdf2pdfocr_spark", master: str | None = None,
         .config("spark.executorEnv.OMP_THREAD_LIMIT", "1")
         .config("spark.executorEnv.MAGICK_THREAD_LIMIT", "1")
     )
+    # spark-submit (or an earlier session) started the driver JVM: its
+    # master and heap are fixed by the launching conf.
+    jvm_up = SparkContext._jvm is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    if not jvm_up:
+        b = b.config("spark.driver.memory", driver_memory or _host_driver_memory())
+        master = master or f"local[{cores}]"
     if master:
         b = b.master(master)
-    elif not SparkSession.getActiveSession():
-        b = b.master(f"local[{cores}]")
     spark = b.getOrCreate()
+    if re.fullmatch(r"local(\[.*\])?", spark.sparkContext.master):
+        spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
+        )
     _ship_package(spark)
     return spark
+
+
+def _host_driver_memory() -> str:
+    """Half of physical RAM (the Python workers need the rest), at most 48g."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(48, ram_gb // 2))}g"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -878,7 +910,6 @@ def _ship_package(spark: SparkSession) -> None:
     the driver's cwd — the in-process equivalent of
     ``spark-submit --py-files pdf2pdfocr_spark.zip`` (north_rule packaging).
     Idempotent per session."""
-    import os
     import shutil
     import tempfile
 

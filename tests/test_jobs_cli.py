@@ -117,3 +117,38 @@ def test_merge_route_negotiated_from_capabilities(spark, tmp_path):
         spark, docs, out, "r1", PipelineConfig(ocr=OcrConfig(engine="cuneiform"))
     )
     assert m["merge_route"] == "multibackground"
+
+
+def test_spark_submit_master_and_heap_win(tmp_path):
+    """Under spark-submit the submitted master and driver memory are the
+    session's: ``build_spark`` must not replace them with ``local[cores]``
+    and its own heap. A local master lists files on the driver."""
+    import os
+    import subprocess
+    import sys
+
+    import pyspark
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from pdf2pdfocr_spark.pipeline import build_spark\n"
+        "spark = build_spark(app='probe')\n"
+        "sc = spark.sparkContext\n"
+        "print('PROBE', sc.master, sc.getConf().get('spark.driver.memory'),\n"
+        "      spark.conf.get("
+        "'spark.sql.sources.parallelPartitionDiscovery.threshold'))\n"
+        "spark.stop()\n"
+    )
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    res = subprocess.run(
+        [submit, "--master", "local[2]", "--driver-memory", "1g", str(probe)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    lines = [ln for ln in res.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert res.returncode == 0 and lines, res.stderr[-2000:]
+    assert lines[0].split() == ["PROBE", "local[2]", "1g", "2147483647"]

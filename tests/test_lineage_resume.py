@@ -105,6 +105,46 @@ def test_resume_scans_only_compact_done_table(spark, tmp_path):
     assert done.count() == lineage.read_output(spark, out).count()
 
 
+def test_resume_lists_checkpoint_on_the_driver(spark, tmp_path):
+    """A local session lists the checkpoint on the driver. Spark otherwise
+    turns each listing of a dir with more than 32 subdirs into a job with
+    one task per subdir, and a resume lists ``spans/`` for its done-set,
+    again when the append refreshes the cached frame that scans it, and
+    for the landed read-back."""
+    import glob
+
+    from pdf2pdfocr_spark import jobs
+
+    docs = corpus.synth_documents(80)
+    out = str(tmp_path / "out")
+    jobs.run_extraction_job(spark, corpus.corpus_df(spark, docs[:60]), out, "r1")
+    jobs.run_extraction_job(spark, corpus.corpus_df(spark, docs[:70]), out, "r2")
+    assert len(glob.glob(f"{out}/spans/run_id=r1/doc_bucket=*")) > 32
+    sc = spark.sparkContext
+    # the task count below was measured at 8 shuffle partitions
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    sc.setJobGroup("resume-tasks", "count the tasks of one resume call")
+    try:
+        m = jobs.run_extraction_job(spark, corpus.corpus_df(spark, docs), out, "r3")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert m["n_docs"] > 0
+    # Tasks that ran (a skipped stage completes none). The call runs 69
+    # here; a listing job over r1's >32 bucket dirs alone adds one task
+    # per dir: under Spark's default threshold two ran, 147 tasks in all.
+    tracker = sc.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(s).numCompletedTasks
+        for j in tracker.getJobIdsForGroup("resume-tasks")
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    assert tasks <= 100, tasks
+
+
 def test_crash_between_spans_and_done_ids_reconciles(spark, tmp_path):
     """ADVICE r4 (high): a run killed AFTER its spans append but BEFORE its
     lineage write must neither double-append on re-submission nor drop
